@@ -6,6 +6,25 @@ Python in the hot path. Catalyst folds these into whole-stage codegen, so
 the entire normalization layer is a single projection over the raw scan —
 the shape that survives a 100 TB input.
 
+That projection compiles to ONE generated Java method per row, and HotSpot
+never JIT-compiles a method over 8,000 bytes of bytecode (its
+``DontCompileHugeMethods`` flag, on by default). Spark's own
+``spark.sql.codegen.hugeMethodLimit`` is 65535, so Spark keeps such a
+method fused, and over 8,000 bytes every listing row runs in the bytecode
+interpreter. Two rules keep the method under the limit and cheap per row:
+
+- a plain literal pattern uses ``F.replace`` (byte-wise on UTF-8, the
+  reference's ``str.replace``), never ``regexp_replace``, which converts
+  each value to a Java ``String`` and back and runs the regex engine;
+  only the prefix alternations in :func:`strip_admin_prefix` stay regexes;
+- :func:`strip_suffix_to_int` guards ``try_cast(... as int)`` with the
+  grammar the cast accepts, so non-numeric values skip the exception the
+  cast builds and formats for each of them.
+
+``tests/test_normalize_codegen.py`` pins the speed-layer projection's
+largest method under 8,000 bytes (``plans.max_method_bytes``) and the
+rewritten expressions' parity with the regex and bare-cast forms.
+
 Reference semantics being reproduced (file:line cites into
 ``/root/reference/``):
 
@@ -42,10 +61,29 @@ __all__ = [
 
 _DECIMAL_RE = r"([\d.,]+)"
 
+#: exactly the strings ``try_cast(... as int)`` parses (UTF8String.toInt
+#: with decimals disallowed, overflow aside): bytes it trims (whitespace or
+#: ISO control: 0x00-0x20, 0x7f), an optional sign, ASCII digits, trimmed
+#: bytes. ``\z``, not ``$``, which would also match before a final "\u2028".
+_INT_RE = r"^[\x00-\x20\x7f]*[+-]?[0-9]+[\x00-\x20\x7f]*\z"
+
+
+def _remove(col: Column, literal: str) -> Column:
+    """Remove every occurrence of ``literal`` (the reference's
+    ``str.replace(literal, "")``)."""
+    return F.replace(col, F.lit(literal))
+
 
 def _comma_to_dot(col: Column) -> Column:
     # Vietnamese decimal comma: "1,5" -> "1.5" (alonhadat.py:134,143,150-151)
-    return F.regexp_replace(col, ",", ".")
+    return F.replace(col, F.lit(","), F.lit("."))
+
+
+def _try_cast_int(col: Column) -> Column:
+    """``col.try_cast("int")`` without the per-value exception: values
+    outside :data:`_INT_RE` are NULL before the cast sees them; the cast
+    stays inside the guard so an overflow is still NULL."""
+    return F.when(col.rlike(_INT_RE), col.try_cast("int"))
 
 
 def parse_post_date(raw: Column) -> Column:
@@ -68,7 +106,9 @@ def strip_admin_prefix(col: Column, prefixes: tuple[str, ...]) -> Column:
 
     The reference does ``str.replace(prefix, "")`` which removes ALL
     occurrences anywhere in the string — reproduced with an unanchored
-    ``regexp_replace`` for bit-parity (SURVEY §2.8 F3 note).
+    ``regexp_replace`` for bit-parity (SURVEY §2.8 F3 note). This stays
+    one regex: two sequential literal replaces are not equivalent, since
+    removing one prefix can form the other ("PhĐường ố " -> "Phố ").
     """
     pattern = "|".join(prefixes)
     return F.regexp_replace(col, pattern, "")
@@ -135,9 +175,7 @@ def parse_dimensions(raw: Column) -> tuple[Column, Column]:
     The reference strips the label, removes ALL 'm' characters, splits on
     'x', comma->dot; "---" (and any 1-part string) -> (NULL, NULL).
     """
-    cleaned = F.regexp_replace(
-        F.regexp_replace(F.trim(raw), "Kích thước: ", ""), "m", ""
-    )
+    cleaned = _remove(_remove(F.trim(raw), "Kích thước: "), "m")
     parts = F.split(cleaned, "x")
     ok = (cleaned != "---") & (F.size(parts) >= 2)
     width = F.when(ok, _comma_to_dot(F.trim(parts.getItem(0))).try_cast("double"))
@@ -148,13 +186,13 @@ def parse_dimensions(raw: Column) -> tuple[Column, Column]:
 def strip_suffix_to_double(raw: Column, suffix: str) -> Column:
     """F7 — strip a unit suffix, cast double (road width 'm',
     alonhadat.py:158-161). Replace-all like the reference's str.replace."""
-    return _comma_to_dot(F.trim(F.regexp_replace(raw, suffix, ""))).try_cast("double")
+    return _comma_to_dot(F.trim(_remove(raw, suffix))).try_cast("double")
 
 
 def strip_suffix_to_int(raw: Column, suffix: str) -> Column:
     """F7 — strip a unit suffix, cast int (floors ' lầu' :163-166,
     bedrooms ' phòng ngủ' :168-171)."""
-    return F.trim(F.regexp_replace(raw, suffix, "")).try_cast("int")
+    return _try_cast_int(F.trim(_remove(raw, suffix)))
 
 
 def parse_parking_flag(raw: Column) -> Column:

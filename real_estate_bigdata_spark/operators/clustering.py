@@ -503,9 +503,11 @@ def pagerank(
         # r16: probe the RAW bounded edge list and dedupe on the driver
         # — the unweighted fast path otherwise paid a full distinct
         # exchange (2 AQE jobs, ~0.4 s at sf0.1) just to bound the
-        # collect. A graph whose raw edge rows exceed the threshold but
-        # whose distinct edges would not takes the distributed path —
-        # conservative, both paths are exact and spec-pinned.
+        # collect. A graph whose raw edge rows exceed the threshold
+        # falls through to the second LIMIT probe below, on the distinct
+        # frame, which still takes the local path when its distinct
+        # edges fit (so that case pays two bounded collects); both
+        # paths are exact and spec-pinned.
         spark = edges.sparkSession
         id_t = raw.schema["__s"].dataType.simpleString()
         out_schema = f"node {id_t}, rank double"

@@ -562,6 +562,12 @@ def minhash_lsh_pairs(
     With 16 bands x 4 rows, P(miss) at j=0.9 is ~4e-8 — the verified
     output is exact for any realistic corpus, at a fraction of the
     all-pairs cost. Output matches :func:`ngram_jaccard_pairs`.
+
+    Contract: ``id_col`` is unique per document, and nothing checks it.
+    The signature kernel emits one row per input row, so a repeated id
+    gets one signature per row, and the verify joins every row of each
+    candidate id: a pair can then appear once per row combination, each
+    with its own per-row Jaccard.
     """
     if not 0 < bands <= num_hashes or num_hashes % bands != 0:
         # a non-divisor silently drops trailing signature rows from the
@@ -1585,6 +1591,13 @@ def neardup_against_store(
     batch's new (id, sig) rows instead of the full updated store — the
     epoch-partitioned ingest loop (``streaming.ingest``) appends those
     rows as its own partition rather than rewriting the store.
+
+    Contract: ``id_col`` is unique within ``new_docs``, as in
+    :func:`minhash_lsh_pairs`, and nothing checks it. Batch signatures
+    are one row per input row, so rows that share a batch id are never
+    compared with each other (the smaller-id rule), and each of them
+    that survives lands in the additions: the returned store is then no
+    longer distinct-by-id.
     """
     if not 0 < bands <= num_hashes or num_hashes % bands != 0:
         raise ValueError(

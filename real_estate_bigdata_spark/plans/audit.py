@@ -11,6 +11,8 @@ optimizations; here Catalyst does them and the tests prove it).
 Parsing the plan string is deliberate: it is the same stable surface
 `.explain()` prints, and it works across Spark versions without
 touching private planner APIs beyond `queryExecution().executedPlan()`.
+:func:`max_method_bytes` is the one exception: generated-code sizes exist
+only in `queryExecution().debug().codegenToSeq()`.
 """
 
 from __future__ import annotations
@@ -25,7 +27,13 @@ __all__ = [
     "executed_plan_str",
     "plan_stats",
     "assert_plan",
+    "max_method_bytes",
 ]
+
+#: HotSpot does not JIT-compile a method with more bytecode than this
+#: (``DontCompileHugeMethods``, on by default). It is a JVM limit, not a
+#: Spark setting: Spark's ``spark.sql.codegen.hugeMethodLimit`` is 65535.
+HOTSPOT_HUGE_METHOD_BYTES = 8000
 
 
 def executed_plan_str(df: DataFrame) -> str:
@@ -42,7 +50,7 @@ class PlanStats:
     sortmerge_joins: int   # SortMergeJoin
     scans: int             # FileScan parquet
     scans_with_pushdown: int  # scans with a non-empty PushedFilters list
-    codegen_spans: int     # WholeStageCodegen regions
+    codegen_spans: int     # whole-stage codegen stages, marked *(N)
     python_stages: int     # ArrowEvalPython / FlatMapGroupsInPandas etc.
 
     def __str__(self) -> str:  # readable assertion failures
@@ -64,10 +72,24 @@ def plan_stats(df: DataFrame) -> PlanStats:
         sortmerge_joins=plan.count("SortMergeJoin"),
         scans=plan.count("FileScan parquet"),
         scans_with_pushdown=len(re.findall(r"PushedFilters: \[[^\]]", plan)),
-        codegen_spans=len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
+        codegen_spans=len(set(re.findall(r"(?:^|- )\*\((\d+)\) ", plan, re.M))),
         python_stages=len(
             re.findall(r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas", plan)
         ),
+    )
+
+
+def max_method_bytes(df: DataFrame) -> int:
+    """Bytecode size of the largest method Spark generates for ``df``'s
+    whole-stage codegen stages (0 when nothing is code-generated).
+
+    Compiles each stage's code (``codegenToSeq``) and reads its
+    ``ByteCodeStats``; a method over :data:`HOTSPOT_HUGE_METHOD_BYTES`
+    runs in the JVM interpreter for every row it processes."""
+    stages = df._jdf.queryExecution().debug().codegenToSeq()
+    return max(
+        (stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())),
+        default=0,
     )
 
 

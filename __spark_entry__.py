@@ -1390,12 +1390,13 @@ def _q_bpe_merges(spark, sf):
     )
 
     # r15: the BATCHED trainer (r8) — BIT-IDENTICAL merge sequence to
-    # train_bpe (disjoint-prefix batching, pinned equal in
-    # tests/test_bpe.py) at a fraction of the driver round-trips: the
-    # sequential loop paid ~2.5 driver-visible jobs per merge (30 jobs
-    # for 12 merges, ~0.1 s/job of local-mode scheduling); the pytest
-    # mirror still pins the SEQUENTIAL trainer at 30 merges on this
-    # same table, so the full loop stays exercised every run
+    # the one-merge-per-iteration loop (disjoint-prefix batching,
+    # pinned equal to the Sennrich mirror in tests/test_bpe.py) at a
+    # fraction of the driver round-trips: the sequential loop paid
+    # ~2.5 driver-visible jobs per merge (30 jobs for 12 merges, ~0.1
+    # s/job of local-mode scheduling); the pytest mirror still pins the
+    # sequential loop (batch_size=1, small_vocab_threshold=0) at 30
+    # merges on this same table, so the full loop stays exercised
     merges = train_bpe_batched(
         load_table(spark, sf, "documents"), n_merges=12
     )

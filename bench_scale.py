@@ -93,7 +93,6 @@ from real_estate_bigdata_spark.operators import multimodal as mm
 from real_estate_bigdata_spark.operators import text_analysis as ta
 from real_estate_bigdata_spark.operators.bpe import (
     bpe_merge_table,
-    train_bpe,
     train_bpe_batched,
 )
 from real_estate_bigdata_spark.operators.clustering import (
@@ -355,8 +354,12 @@ def _bm25_build_and_search(spark, docs, path):
 def _bpe_train_df(spark, docs):
     # 10 merges: the iteration count is a CONSTANT of the measurement
     # (vocab-bounded per-iteration cost is what scales), so the curve
-    # isolates the corpus-sized word-count collapse
-    return bpe_merge_table(spark, train_bpe(docs, n_merges=10))
+    # isolates the corpus-sized word-count collapse; batch_size=1 with
+    # the driver-local path off is the sequential distributed loop
+    merges = train_bpe_batched(
+        docs, n_merges=10, batch_size=1, small_vocab_threshold=0
+    )
+    return bpe_merge_table(spark, merges)
 
 
 #: per-scale {round_trips, merges} from the latest batched-BPE battery

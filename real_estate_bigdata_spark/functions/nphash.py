@@ -99,10 +99,10 @@ def simhash_sims(arrays: list[np.ndarray]) -> np.ndarray:
     """SimHash signatures for a batch of NON-EMPTY int64 feature arrays.
 
     Per doc: bit i of the signature is set iff more than half the
-    features have bit i set (votes +1/-1, sign) — exactly
-    ``dedup.simhash64`` / the 64-sum aggregate: ``2*ones_i > n_feats``
-    is integer arithmetic, so equality with the JVM formulation is
-    exact, not approximate. Returns int64[n_docs] (bit 63 wraps to the
+    features have bit i set (votes +1/-1, sign) — exactly the per-row
+    SimHash Column spec in ``tests/test_dedup_similarity.py``:
+    ``2*ones_i > n_feats`` is integer arithmetic, so equality with the
+    JVM formulation is exact, not approximate. Returns int64[n_docs] (bit 63 wraps to the
     sign bit, same as the JVM's ``shiftleft(1L, 63)`` addition).
     """
     flat, starts = _flat_segments(arrays)
@@ -122,11 +122,12 @@ def minhash_sigs(arrays: list[np.ndarray], num_hashes: int) -> np.ndarray:
 
     Lane i of a doc's signature = signed min over its shingles s of
     ``F.xxhash64(s, lit(i))`` — bit-identical to the 64-min aggregate
-    and to ``functions.text.minhash_signature`` (per-row spec). The
-    first hash link (shingle, seed 42) is shared across all lanes; each
-    lane re-hashes only the lane index with the shared link as seed,
-    exactly as the JVM chains the two children — and the lane index is
-    an IntegerType literal, so it takes the 4-byte ``hashInt`` path.
+    and to the per-row MinHash Column spec in
+    ``tests/test_dedup_similarity.py``. The first hash link (shingle,
+    seed 42) is shared across all lanes; each lane re-hashes only the
+    lane index with the shared link as seed, exactly as the JVM chains
+    the two children — and the lane index is an IntegerType literal, so
+    it takes the 4-byte ``hashInt`` path.
     """
     flat, starts = _flat_segments(arrays)
     h0 = xxhash64_long(flat)

@@ -1,7 +1,8 @@
 """Text-analysis functions for training-data pipelines.
 
 All JVM-side Column expressions (no Python UDFs): tokenization, n-gram
-shingling, quality scoring, language ID, fingerprinting. These power the
+shingling, quality scoring, fingerprinting, and the stopword lists that
+``operators.text_analysis.lang_id_report`` scores languages with. These power the
 dedup / quality operators in ``operators.dedup`` and the ``documents``
 queries. The reference has no text analytics (SURVEY §2.10 ABSENT) — this
 is north-star surface, so Spark built-in semantics are authoritative.
@@ -24,14 +25,12 @@ __all__ = [
     "word_ngrams",
     "hashed_ngrams_from_token_hashes",
     "portable_hash64",
-    "char_shingles",
     "quality_metrics",
-    "lang_id",
     "fingerprint64",
-    "minhash_signature",
 ]
 
-#: Tiny per-language stopword lists for the n-gram language-ID heuristic.
+#: Tiny per-language stopword lists for the language-ID heuristic
+#: (``operators.text_analysis.lang_id_report``).
 #: Deliberately small + deterministic; real pipelines would swap in a model.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "that"),
@@ -93,10 +92,10 @@ def hashed_ngrams_from_token_hashes(th: Column, n: int) -> Column:
     empty array).
 
     THE single definition of the hashed-n-gram feature used by both the
-    per-row spec Columns (``dedup.simhash64``) and the scale-out
-    DataFrame paths (``dedup._hashed_shingles``) — the bit-equality
-    contracts between spec and fast formulations hang on this combine
-    never forking. Callers materialize ``th`` as a projected column
+    per-row spec Columns (the SimHash spec in
+    ``tests/test_dedup_similarity.py``) and the scale-out DataFrame paths
+    (``dedup._hashed_shingles``) — the bit-equality contracts between
+    spec and fast formulations hang on this combine never forking. Callers materialize ``th`` as a projected column
     first when the expression feeds further per-element access (avoids
     re-evaluating the token-hash transform per subscript).
     """
@@ -117,16 +116,6 @@ def portable_hash64(s: Column) -> Column:
     slower than xxhash64 but still JVM-side codegen; use only where the
     cross-engine contract is worth it."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Character k-shingles -> array<string>; shorter than ``k`` -> empty."""
-    return F.when(F.length(text) < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(text) - (k - 1)),
-            lambda i: F.substring(text, i, k),
-        )
-    )
 
 
 def quality_metrics(text: Column) -> dict[str, Column]:
@@ -167,28 +156,6 @@ def quality_metrics(text: Column) -> dict[str, Column]:
     }
 
 
-def lang_id(text: Column) -> Column:
-    """N-gram-free language-ID heuristic: argmax over per-language stopword
-    hit counts; deterministic tie-break by language code order; no hits at
-    all -> 'und'."""
-    toks = tokenize(F.lower(text))
-    scored = None
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    # Iterate in sorted order so ties resolve deterministically to the
-    # alphabetically-first language with the max score (strict > below).
-    for code in sorted(LANG_STOPWORDS):
-        words = LANG_STOPWORDS[code]
-        arr = F.array(*[F.lit(w) for w in words])
-        score = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        cond = score > best_score
-        best_lang = F.when(cond, F.lit(code)).otherwise(best_lang)
-        best_score = F.when(cond, score).otherwise(best_score)
-        scored = True
-    assert scored
-    return best_lang
-
-
 def fingerprint64(text: Column) -> Column:
     """64-bit document fingerprint via xxhash64 over the
     whitespace-normalized text — an exact-dup key robust to spacing.
@@ -197,20 +164,3 @@ def fingerprint64(text: Column) -> Column:
     return F.when(text.isNull(), F.lit(None).cast("bigint")).otherwise(
         F.xxhash64(F.concat_ws(" ", tokenize(text)))
     )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature -> array<bigint> of length ``num_hashes``.
-
-    Each hash family member is ``min(xxhash64(shingle, seed=i))`` over the
-    doc's shingle set. Pure Column expression: one pass over the shingle
-    array per hash (num_hashes fused multiplications, no shuffle, no UDF).
-    Empty shingle set -> array of NULLs (never matches anything).
-    """
-    sigs = []
-    for i in range(num_hashes):
-        h = F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))
-        )
-        sigs.append(h)
-    return F.array(*sigs)

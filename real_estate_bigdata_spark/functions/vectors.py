@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["dot", "l2_norm", "cosine_similarity", "cosine_from_norms", "l2_distance"]
+__all__ = ["dot", "l2_norm", "cosine_similarity", "cosine_from_norms"]
 
 
 def _as_double(v: Column) -> Column:
@@ -52,13 +52,3 @@ def cosine_from_norms(
     pins its rounding, so it must not fork per call site.
     """
     return F.round(F.when(n_a * n_b != 0.0, dot(v_a, v_b) / (n_a * n_b)), decimals)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -28,7 +28,6 @@ __all__ = [
     "pivot_status_counts",
     "top_keys_per_group",
     "approx_distinct_counts",
-    "stats_summary",
     "stats_profile",
     "correlation_profile",
     "forecast_revenue",
@@ -184,29 +183,16 @@ def approx_distinct_counts(orders: DataFrame, rsd: float = 0.02) -> DataFrame:
     )
 
 
-def stats_summary(orders: DataFrame) -> DataFrame:
-    """Statistical aggregates per priority: exact interpolated
-    percentiles (median/p90) + sample stddev.
+def stats_profile(orders: DataFrame) -> DataFrame:
+    """Distinct customers plus statistical aggregates per priority, in
+    one aggregate over the same group key — one shuffle produces the
+    distinct count, the multi-measure stats (sample stddev), and the
+    exact interpolated percentiles (median/p90) together.
 
     ``percentile`` is the exact sort-based aggregate (matches ANSI
     ``quantile_cont``); at extreme group sizes switch to
     ``approx_percentile`` and accept sketch error — kept exact here
-    because the oracle is exact.
-    """
-    return orders.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.avg("o_totalprice"), 6).alias("avg_price"),
-        F.round(F.stddev_samp("o_totalprice"), 6).alias("sd_price"),
-        F.round(F.percentile("o_totalprice", F.lit(0.5)), 6).alias("median_price"),
-        F.round(F.percentile("o_totalprice", F.lit(0.9)), 6).alias("p90_price"),
-    )
-
-
-def stats_profile(orders: DataFrame) -> DataFrame:
-    """``distinct_counts`` + ``stats_summary`` fused into one aggregate
-    over the same group key — one shuffle produces the distinct count,
-    the multi-measure stats, and the exact percentiles together (the
-    plan a production view would use instead of two passes)."""
+    because the oracle is exact."""
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count("*").alias("n_orders"),

@@ -16,10 +16,11 @@ Execution model — the part worth getting right at 100 TB:
   to the ``max_vocab_words`` most frequent words (standard practice;
   the merge statistics of the long tail are noise and the truncation
   bounds every later iteration).
-* Each merge iteration is ONE bounded aggregate over the exploded
+* Each iteration is ONE bounded aggregate over the exploded
   adjacent-symbol-pair table of that words frame (weighted by word
-  count, map-side combined), a 1-row TakeOrdered for the argmax, and a
-  pure Column-expression rewrite of the symbol arrays (a greedy
+  count, map-side combined), a small TakeOrdered for the ranking head
+  (the argmax plus the rows that decide how many merges are provably
+  safe to apply at once), and a pure Column-expression rewrite of the symbol arrays (a greedy
   left-to-right non-overlapping fold via ``aggregate`` — NO Python in
   the loop body; the only driver state is the merge list itself, which
   IS the artifact).
@@ -43,7 +44,6 @@ from real_estate_bigdata_spark.functions.text import tokenize
 from real_estate_bigdata_spark.util import ensure_min_parallelism
 
 __all__ = [
-    "train_bpe",
     "train_bpe_batched",
     "bpe_merge_table",
     "bpe_encode",
@@ -144,59 +144,6 @@ def _word_table(
         # keeps the truncation content-deterministic
         words = words.orderBy(F.desc("cnt"), "word").limit(max_vocab_words)
     return words.withColumn("symbols", _initial_symbols(F.col("word")))
-
-
-def train_bpe(
-    docs: DataFrame,
-    n_merges: int = 100,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    max_vocab_words: int | None = 1_000_000,
-    checkpoint_every: int = 8,
-) -> list[tuple[str, str]]:
-    """Learn up to ``n_merges`` BPE merges from the corpus; returns the
-    ordered merge list (the tokenizer artifact — inherently driver-
-    sized: one (left, right) pair per merge). Stops early when no
-    adjacent pair reaches ``min_pair_count`` (merging singletons only
-    memorizes the corpus). Whitespace pre-tokenization via the shared
-    ``tokenize`` (the engine's one tokenization definition).
-
-    Each iteration: explode adjacent pairs of the (vocab-sized) words
-    frame weighted by word count -> one map-side-combined aggregate ->
-    1-row TakeOrdered argmax (count desc, then (l, r) asc — the
-    deterministic tie-break the pytest mirror pins) -> Column-fold
-    rewrite of the symbol arrays. ``checkpoint_every`` bounds the
-    expression/lineage depth.
-    """
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if min_pair_count < 1:
-        raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
-    words = _word_table(docs, text_col, max_vocab_words).localCheckpoint(
-        eager=True
-    )
-    merges: list[tuple[str, str]] = []
-    for i in range(n_merges):
-        best = (
-            words.select(
-                "cnt", F.explode(_adjacent_pairs(F.col("symbols"))).alias("pr")
-            )
-            .groupBy("pr.l", "pr.r")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.desc("n"), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] < min_pair_count:
-            break
-        left, right = best[0]["l"], best[0]["r"]
-        merges.append((left, right))
-        words = words.withColumn(
-            "symbols", _apply_merge(F.col("symbols"), left, right)
-        )
-        if (i + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=True)
-    return merges
 
 
 def _disjoint_prefix_batch(
@@ -369,21 +316,33 @@ def train_bpe_batched(
     stats: dict | None = None,
     small_vocab_threshold: int = 65_536,
 ) -> list[tuple[str, str]]:
-    """:func:`train_bpe` with up to ``batch_size`` merges applied per
-    Spark iteration — BIT-IDENTICAL output (pytest-pinned against both
-    the sequential trainer and the pure-Python Sennrich mirror) with
-    strictly fewer driver round-trips.
+    """Learn up to ``n_merges`` BPE merges from the corpus; returns the
+    ordered merge list (the tokenizer artifact — inherently driver-
+    sized: one (left, right) pair per merge). Stops early when no
+    adjacent pair reaches ``min_pair_count`` (merging singletons only
+    memorizes the corpus). Whitespace pre-tokenization via the shared
+    ``tokenize`` (the engine's one tokenization definition).
 
-    The sequential trainer's cost at production vocab sizes is the
-    iteration count: one aggregate + one collect per merge, ~32k
-    round-trips for a GPT-2-sized vocabulary. Merges on
-    pairwise-disjoint symbol sets commute with each other's counts, so
-    each iteration fetches the top ``batch_size + 1`` ranked pairs and
-    applies the longest provably-safe prefix
-    (:func:`_disjoint_prefix_batch`: pairwise-disjoint, no self-pairs,
-    counts strictly above the first non-selected row). Worst case
-    (fully entangled ranking) the prefix is the argmax alone and the
-    trainer degrades to exactly :func:`train_bpe`.
+    Distributed loop: each iteration explodes adjacent pairs of the
+    (vocab-sized) words frame weighted by word count -> one
+    map-side-combined aggregate -> TakeOrdered of the top
+    ``batch_size + 1`` pairs (count desc, then (l, r) asc — the
+    deterministic tie-break the pytest mirror pins) -> Column-fold
+    rewrite of the symbol arrays for every applied merge.
+    ``checkpoint_every`` merges bound the expression/lineage depth.
+
+    The one-merge-per-iteration (sequential) trainer's cost at
+    production vocab sizes is the iteration count: one aggregate + one
+    collect per merge, ~32k round-trips for a GPT-2-sized vocabulary.
+    Merges on pairwise-disjoint symbol sets commute with each other's
+    counts, so each iteration applies the longest provably-safe prefix
+    of the fetched ranking (:func:`_disjoint_prefix_batch`:
+    pairwise-disjoint, no self-pairs, counts strictly above the first
+    non-selected row) — BIT-IDENTICAL output to the sequential trainer
+    (pytest-pinned against the pure-Python Sennrich mirror) with
+    strictly fewer driver round-trips. Worst case (fully entangled
+    ranking) the prefix is the argmax alone and the loop degrades to
+    the sequential trainer.
 
     Honest sizing: the reduction is corpus-structural. Natural-language
     ranking heads entangle on shared letters (e·r / o·r / a·r chain on
@@ -394,17 +353,18 @@ def train_bpe_batched(
     counts) give up the deterministic merge sequence this engine pins
     against its reference mirror; this one never does.
 
-    Returns the ordered merge list. ``batch_size=1`` IS the sequential
-    trainer (one extra fetched row, same argmax). A caller-provided
-    ``stats`` dict receives ``round_trips`` (aggregate+collect
-    iterations) and ``merges`` — the scale battery records both so the
-    batching ratio is a measured number, not a claim.
+    ``batch_size=1`` IS the sequential trainer (one extra fetched row,
+    same argmax); with ``small_vocab_threshold=0`` it runs on every
+    vocabulary size. A caller-provided ``stats`` dict receives
+    ``round_trips`` (aggregate+collect iterations) and ``merges`` — the
+    scale battery records both so the batching ratio is a measured
+    number, not a claim.
 
     r16 fast path: after the (one, corpus-sized) collapse to the word
     table, a vocab within ``small_vocab_threshold`` rows is collected
     with ONE bounded LIMIT-k+1 probe and trained entirely on the driver
     (:func:`_train_bpe_local` — bit-identical, pinned against both the
-    distributed trainers and the pytest mirror). Every further Spark
+    distributed loop and the pytest mirror). Every further Spark
     iteration on a small vocab was pure round-trip overhead: merge
     statistics depend only on the word table, which is vocab-sized by
     construction. Words containing non-BMP characters force the

@@ -24,14 +24,14 @@ plan doubles per iteration and the job dies on plan size long before
 data size. For high-diameter graphs (not dedup-shaped, but callers may
 feed arbitrary edge lists) the O(log²n)-round large-star/small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14) is implemented as the fallback: ``algorithm="auto"``
-(the default) runs hash-min for ``max_iter`` label-changing rounds and,
-instead of raising, switches to star contraction on the already-
-checkpointed edge set; ``"hashmin"`` / ``"star"`` force either path.
-Both produce identical labels (component minimum), so the choice is
-purely a round-count/shuffle-width trade: hash-min does one cheap
+Beyond", SoCC'14) is implemented as the fallback: ``connected_components``
+runs hash-min for ``max_iter`` label-changing rounds and, instead of
+raising, switches to star contraction on the already-checkpointed edge
+set. Both produce identical labels (component minimum), so the switch
+is purely a round-count/shuffle-width trade: hash-min does one cheap
 join+agg per diameter step, star contraction rewires edges toward the
-minimum and converges in logarithmic rounds regardless of diameter.
+minimum and converges in logarithmic rounds regardless of diameter. On
+dedup graphs hash-min is the cheaper of the two, so it runs first.
 """
 
 from __future__ import annotations
@@ -67,39 +67,36 @@ def connected_components(
     max_iter: int = 25,
     out_id: str = "id",
     out_label: str = "cluster_id",
-    algorithm: str = "auto",
     small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
 ) -> DataFrame:
     """(id, cluster_id) for every vertex appearing in ``pairs``, where
     ``cluster_id`` is the MINIMUM vertex id of its connected component
     — deterministic regardless of partitioning, pair order, or
-    algorithm choice. Vertices not in any pair (singletons) are absent
+    the path taken. Vertices not in any pair (singletons) are absent
     by construction; callers wanting them keep ``left_anti`` of the
     corpus against this result.
 
-    ``algorithm``:
+    Path policy, in order:
 
-    - ``"hashmin"`` — min-label propagation; one join + one aggregate
-      per round, rounds = component diameter. The cheapest path for
-      dedup-shaped graphs (dense clusters, single-digit diameter).
-      Raises ``RuntimeError`` after ``max_iter`` label-changing rounds.
-    - ``"star"`` — Kiveris et al. large-star/small-star contraction;
-      converges in O(log²n) rounds regardless of diameter.
-    - ``"auto"`` (default) — hash-min first; if it hasn't converged
-      after ``max_iter`` rounds, restart as star contraction on the
-      same checkpointed edge set instead of raising. Dedup graphs
-      never hit the fallback; a pathological chain costs the abandoned
-      hash-min rounds, then converges.
+    - union-find on the driver when the pair set has at most
+      ``small_graph_threshold`` edges (below);
+    - hash-min — min-label propagation; one join + one aggregate per
+      round, rounds = component diameter. The cheap distributed path
+      for dedup-shaped graphs (dense clusters, single-digit diameter);
+    - star contraction (Kiveris et al. large-star/small-star) if
+      hash-min hasn't converged after ``max_iter`` rounds, restarted on
+      the same checkpointed edge set; it converges in O(log²n) rounds
+      regardless of diameter. Dedup graphs never hit the fallback; a
+      pathological chain costs the abandoned hash-min rounds, then
+      converges.
 
     The input ``pairs`` plan is checkpointed up front: both union
     branches and every round read the materialized pair set, not the
     (possibly expensive — e.g. LSH verify) upstream plan.
 
-    Small-graph fast path (``algorithm="auto"`` only — forcing
-    ``"hashmin"``/``"star"`` always runs the named distributed path,
-    preserving their documented error contracts): when the checkpointed
-    pair set has at most ``small_graph_threshold`` edges (probed with a
-    bounded ``LIMIT threshold+1`` count), components are resolved with
+    Small-graph fast path: when the checkpointed pair set has at most
+    ``small_graph_threshold`` edges (probed with a bounded
+    ``LIMIT threshold+1`` count), components are resolved with
     driver-side union-find over the collected edges — one collect of a
     few MB replaces several shuffle rounds whose per-round overhead
     dominates at this size. Labels are identical (component minimum)
@@ -109,12 +106,10 @@ def connected_components(
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if algorithm not in ("auto", "hashmin", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     a, b = F.col(src), F.col(dst)
     cp = pairs.select(a.alias("u"), b.alias("v")).localCheckpoint(eager=True)
 
-    if algorithm == "auto" and small_graph_threshold > 0:
+    if small_graph_threshold > 0:
         # ONE bounded collect replaces the r13 probe-count + collect
         # pair (VERDICT r15 task #3): if LIMIT threshold+1 returns at
         # most threshold rows, those rows ARE the whole edge set — the
@@ -126,15 +121,7 @@ def connected_components(
         if len(rows) <= small_graph_threshold:
             return _unionfind_labels(cp, rows, out_id, out_label)
 
-    labels = None
-    if algorithm in ("auto", "hashmin"):
-        labels = _hashmin_labels(cp, max_iter)
-        if labels is None and algorithm == "hashmin":
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds; "
-                f"component diameter exceeds max_iter (use algorithm='auto' "
-                f"or 'star' for high-diameter graphs)"
-            )
+    labels = _hashmin_labels(cp, max_iter)
     if labels is None:
         labels = _star_labels(cp)
     return labels.select(F.col("id").alias(out_id), F.col("label").alias(out_label))

@@ -23,8 +23,8 @@ full family, each designed scale-out first:
 Feature hashing is xxhash64/md5 (JVM-side, seeded, deterministic);
 the MinHash/SimHash signature tallies over those features run as
 vectorized numpy Arrow-batch kernels (``functions.nphash``, bit-exact
-mirrors pinned against the JVM spec Columns) — no row-at-a-time Python
-anywhere.
+mirrors pinned against per-row JVM Column specs kept in
+``tests/test_dedup_similarity.py``) — no row-at-a-time Python anywhere.
 """
 
 from __future__ import annotations
@@ -47,13 +47,13 @@ __all__ = [
     "ngram_jaccard_pairs",
     "ngram_containment_pairs",
     "minhash_lsh_pairs",
-    "simhash64",
     "simhash_signatures",
     "simhash_pairs",
     "hamming_banded_pairs",
     "embedding_neardup_pairs",
     "embedding_neardup_pairs_blocked",
     "embedding_neardup_pairs_ivf",
+    "embedding_neardup_pairs_pca",
     "semantic_dedup",
     "redact_duplicate_spans",
     "dedup_against_store",
@@ -438,10 +438,10 @@ def _minhash_signatures(
     """(id, sig: array<num_hashes> bigint) from hashed shingles.
 
     The hash family is min(xxhash64(shingle_id, i)) over the 64-bit
-    shingle universe — same structure as
-    functions.text.minhash_signature (the per-row spec), applied to
-    hashed rather than string shingles, and pinned bit-identical to it
-    by ``test_minhash_agg_signatures_match_per_row_spec``. Shingle-less
+    shingle universe, pinned bit-identical to a per-row Column spec
+    (one ``array_min(transform(xxhash64(s, i)))`` per lane, kept in
+    ``tests/test_dedup_similarity.py``) by
+    ``test_minhash_agg_signatures_match_per_row_spec``. Shingle-less
     docs (NULL/empty/too-short text) produce no signature row.
 
     r16 (guide §4.2/§7.3): computed by one vectorized numpy kernel per
@@ -641,36 +641,6 @@ def _verify_jaccard(
     )
 
 
-def simhash64(text_col, n: int = 2):
-    """64-bit SimHash Column over word n-gram features.
-
-    Classic bit-voting: for each of 64 bit positions, sum +1/-1 votes of
-    each feature's hash bit; sign -> bit. Expressed as one aggregate
-    over the feature array per row — map-only, no shuffle. Features are
-    hashed n-grams built from per-token xxhash64 with a rolling n-wise
-    combine (no n-gram strings materialized — same construction as
-    ``_hashed_shingles``, duplicates kept so they vote repeatedly).
-    """
-    toks = tokenize(text_col)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    hashes = hashed_ngrams_from_token_hashes(th, n)
-    bit_votes = [
-        F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                h.bitwiseAND(F.shiftleft(F.lit(1).cast("bigint"), i)) != 0, 1
-            ).otherwise(-1),
-        )
-        for i in range(64)
-    ]
-    out = F.lit(0).cast("bigint")
-    for i, v in enumerate(bit_votes):
-        out = out + F.when(v > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(0)
-    return out
-
-
 def simhash_signatures(
     docs: DataFrame,
     n: int = 2,
@@ -680,7 +650,9 @@ def simhash_signatures(
 ) -> DataFrame:
     """(id, sim) SimHash signatures, computed the scale-out way.
 
-    Identical bits to :func:`simhash64` (pinned by
+    Identical bits to the per-row Column spec (64 bit-vote aggregates
+    over the hashed n-gram array, kept in
+    ``tests/test_dedup_similarity.py`` and pinned by
     ``test_simhash_signatures_match_per_row_spec``): feature hashing
     stays JVM-side (``_hashed_shingles``), and the 64 bit-votes are
     tallied by ONE vectorized numpy kernel per Arrow batch

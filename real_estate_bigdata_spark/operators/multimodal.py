@@ -51,6 +51,8 @@ __all__ = [
     "pil_available",
     "audio_codec",
     "encode_png",
+    "encode_bmp",
+    "encode_gif",
     "decode_image",
     "decode_audio",
     "extract_image_features",
@@ -63,6 +65,7 @@ __all__ = [
     "image_phash",
     "image_neardup_pairs",
     "png_dimensions",
+    "image_dimensions",
 ]
 
 try:  # optional dependency: real image codec

@@ -39,6 +39,7 @@ __all__ = [
     "shuffle_shard",
     "stratified_hash_sample",
     "temperature_mixture",
+    "time_split",
 ]
 
 #: buckets for percent-style fractions; md5 prefix modulo this

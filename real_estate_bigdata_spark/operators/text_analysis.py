@@ -25,15 +25,18 @@ __all__ = [
     "bm25_search",
     "append_bm25_epoch",
     "compact_bm25_index",
+    "retract_from_bm25_index",
     "rrf_fuse",
     "doc_quality_profile",
     "token_accounting",
     "lang_id_report",
     "doc_fingerprints",
+    "portable_fingerprint",
     "remove_boilerplate_lines",
     "repetition_metrics",
     "vocab_coverage",
     "vocab_top_tokens",
+    "approx_heavy_hitters",
     "bigram_logprob_scores",
     "dedup_paragraphs",
     "unigram_logprob_scores",
@@ -81,12 +84,12 @@ def lang_id_report(docs: DataFrame) -> DataFrame:
     the labeled language — the confusion-matrix input.
 
     Staged projections (tokens -> per-language scores -> argmax) instead
-    of the single nested Column expression in ``functions.text.lang_id``:
-    the chained argmax there embeds every score expression into every
-    branch of the when-tree, so each language's token scan is
-    re-evaluated many times per row. Splitting the stages keeps each
-    score computed once; the argmax then compares 5 cheap ints. Same
-    output (lang_id stays as the per-row spec for ad-hoc use).
+    of one nested Column expression: a chained argmax over inline score
+    expressions embeds every score into every branch of the when-tree,
+    so each language's token scan is re-evaluated many times per row.
+    Splitting the stages keeps each score computed once; the argmax then
+    compares 5 cheap ints. Ties resolve to the alphabetically-first
+    language with the max score (strict ``>``); no hits at all -> 'und'.
     """
     from real_estate_bigdata_spark.functions.text import LANG_STOPWORDS, tokenize
 

@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "top_n_per_group",
-    "running_totals",
-    "moving_average",
     "window_frames",
     "rank_dense_ntile",
 ]
@@ -38,44 +36,12 @@ def top_n_per_group(
     )
 
 
-def running_totals(events: DataFrame) -> DataFrame:
-    """Per-user running sum + lag delta over event time.
-
-    rows-between unbounded-preceding..current running aggregate; sequential
-    within partition so double accumulation is deterministic.
-    """
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        "event_id",
-        "user_id",
-        F.round(F.sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 6).alias(
-            "running_value"
-        ),
-        F.round(
-            F.col("value") - F.coalesce(F.lag("value").over(w), F.lit(0.0)), 6
-        ).alias("delta_value"),
-    )
-
-
-def moving_average(events: DataFrame, lookback: int = 3) -> DataFrame:
-    """Moving average of `value` over the previous ``lookback`` rows +
-    current, per event_type, ordered by time."""
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-lookback, 0)
-    )
-    return events.select(
-        "event_id",
-        "event_type",
-        F.round(F.avg("value").over(w), 6).alias("moving_avg"),
-    )
-
-
 def window_frames(events: DataFrame, lookback: int = 3) -> DataFrame:
-    """``running_totals`` + ``moving_average`` in one query: the
-    unbounded-preceding running frame (per user) and the bounded
-    trailing frame (per event type) evaluated over the same scan.
+    """Per-user running total with lag delta, plus the per-event-type
+    moving average of ``value`` over the previous ``lookback`` rows and
+    the current one, in one query: the unbounded-preceding running frame
+    (per user) and the bounded trailing frame (per event type) evaluated
+    over the same scan.
 
     Two window specs with different partition keys plan as two
     sequential exchanges — the same total shuffle work as running the

@@ -54,6 +54,14 @@ def _py_bpe(texts, n_merges, min_pair_count=2, max_vocab_words=None):
     return merges, vocab
 
 
+def _train_sequential(docs, **kw):
+    """The one-merge-per-iteration distributed loop: batching off and
+    the driver-local fast path off."""
+    return bpe.train_bpe_batched(
+        docs, batch_size=1, small_vocab_threshold=0, **kw
+    )
+
+
 CORPUS = [
     "low low low low low",
     "lower lower newer newer newer newer newer newer",
@@ -67,7 +75,7 @@ def test_merge_sequence_matches_reference_mirror(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
     )
-    got = bpe.train_bpe(df, n_merges=15)
+    got = _train_sequential(df, n_merges=15)
     want, _ = _py_bpe(CORPUS, 15)
     assert got == want
     assert len(got) > 3  # the corpus genuinely supports merges
@@ -76,7 +84,7 @@ def test_merge_sequence_matches_reference_mirror(spark):
 def test_merge_sequence_matches_on_real_testdata(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     texts = [r.text for r in docs.select("text").collect()]
-    got = bpe.train_bpe(docs, n_merges=30)
+    got = _train_sequential(docs, n_merges=30)
     want, _ = _py_bpe(texts, 30)
     assert got == want
 
@@ -85,7 +93,7 @@ def test_encode_reproduces_mirror_segmentations(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
     )
-    merges = bpe.train_bpe(df, n_merges=10)
+    merges = _train_sequential(df, n_merges=10)
     _, vocab = _py_bpe(CORPUS, 10)
     out = {r.doc_id: r for r in bpe.bpe_encode(df, merges).collect()}
     for i, t in enumerate(CORPUS):
@@ -106,7 +114,7 @@ def test_overlapping_pair_merges_left_to_right(spark):
     df = spark.createDataFrame(
         [(1, "aaaa aaaa aaa")], "doc_id long, text string"
     )
-    merges = bpe.train_bpe(df, n_merges=1, min_pair_count=1)
+    merges = _train_sequential(df, n_merges=1, min_pair_count=1)
     assert merges == [("a", "a")]
     out = bpe.bpe_encode(df, merges).collect()[0]
     assert out.bpe_tokens == [
@@ -118,11 +126,11 @@ def test_early_stop_and_validation(spark):
     df = spark.createDataFrame(
         [(1, "x y z")], "doc_id long, text string"  # all pairs singleton
     )
-    assert bpe.train_bpe(df, n_merges=5, min_pair_count=2) == []
+    assert _train_sequential(df, n_merges=5, min_pair_count=2) == []
     with pytest.raises(ValueError):
-        bpe.train_bpe(df, n_merges=0)
+        _train_sequential(df, n_merges=0)
     with pytest.raises(ValueError):
-        bpe.train_bpe(df, n_merges=1, min_pair_count=0)
+        _train_sequential(df, n_merges=1, min_pair_count=0)
 
 
 def test_max_vocab_words_truncation_matches_mirror(spark):
@@ -130,7 +138,7 @@ def test_max_vocab_words_truncation_matches_mirror(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = bpe.train_bpe(df, n_merges=5, min_pair_count=1, max_vocab_words=3)
+    got = _train_sequential(df, n_merges=5, min_pair_count=1, max_vocab_words=3)
     want, _ = _py_bpe(texts, 5, min_pair_count=1, max_vocab_words=3)
     assert got == want
 
@@ -142,28 +150,45 @@ def test_merges_deterministic_under_repartition(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
     )
-    a = bpe.train_bpe(df, n_merges=12)
-    b = bpe.train_bpe(df.repartition(13), n_merges=12)
-    c = bpe.train_bpe(df.coalesce(1), n_merges=12)
+    a = _train_sequential(df, n_merges=12)
+    b = _train_sequential(df.repartition(13), n_merges=12)
+    c = _train_sequential(df.coalesce(1), n_merges=12)
     assert a == b == c
 
 
 class TestBatchedTrainer:
-    """train_bpe_batched must be BIT-IDENTICAL to train_bpe (and hence
-    to the mirror) at every batch size — the batching is a round-trip
+    """train_bpe_batched must be BIT-IDENTICAL to the sequential
+    Sennrich mirror at every batch size — the batching is a round-trip
     optimization, never a semantics change."""
 
     def test_equals_sequential_on_corpus(self, spark):
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
         )
-        seq = bpe.train_bpe(df, n_merges=15)
+        seq, _ = _py_bpe(CORPUS, 15)
         for bs in (1, 2, 4, 16):
             for th in (0, 65_536):  # distributed loop AND r16 local fast path
                 got = bpe.train_bpe_batched(
                     df, n_merges=15, batch_size=bs, small_vocab_threshold=th
                 )
                 assert got == seq, (bs, th)
+
+    def test_small_vocab_threshold_boundary(self, spark):
+        """At ``small_vocab_threshold`` equal to the distinct-word count
+        the vocab is trained on the driver; one below, it takes the
+        distributed loop. Both give the mirror's merges."""
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
+        )
+        w = len({word for t in CORPUS if t for word in t.split()})
+        want, _ = _py_bpe(CORPUS, 15)
+        for th, path in ((w, "local"), (w - 1, "distributed")):
+            stats = {}
+            got = bpe.train_bpe_batched(
+                df, n_merges=15, small_vocab_threshold=th, stats=stats
+            )
+            assert got == want, th
+            assert stats["path"] == path, th
 
     def test_equals_mirror_on_real_testdata(self, spark):
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")

@@ -1,6 +1,7 @@
 """Connected-components semantics the oracle can't fully pin: transitive
 chains, multi-component graphs, determinism under repartitioning,
-survivor policy, and the non-convergence guard."""
+survivor policy, the star fallback when hash-min does not converge,
+and the union-find threshold boundary."""
 
 from __future__ import annotations
 
@@ -16,6 +17,11 @@ SF = "/root/testdata/sf0.01"
 
 def _pairs(spark, rows):
     return spark.createDataFrame(rows, "id_a long, id_b long")
+
+
+def _edges(spark, rows):
+    """The checkpointed (u, v) frame the distributed label paths read."""
+    return spark.createDataFrame(rows, "u long, v long").localCheckpoint(eager=True)
 
 
 def test_transitive_chain_collapses_to_one_cluster(spark):
@@ -52,15 +58,13 @@ def test_diameter_equal_to_max_iter_converges(spark):
 
 def test_non_convergence_raises(spark):
     # path graph of diameter 5 with max_iter=2 cannot finish under
-    # forced hash-min; auto falls back to star contraction instead
-    chain = _pairs(spark, [(i, i + 1) for i in range(1, 7)])
-    with pytest.raises(RuntimeError, match="converge"):
-        cl.connected_components(chain, max_iter=2, algorithm="hashmin")
+    # hash-min; connected_components falls back to star contraction
+    rows = [(i, i + 1) for i in range(1, 7)]
+    chain = _pairs(spark, rows)
+    assert cl._hashmin_labels(_edges(spark, rows), 2) is None
     with pytest.raises(ValueError):
         cl.connected_components(chain, max_iter=0)
-    with pytest.raises(ValueError):
-        cl.connected_components(chain, algorithm="bogus")
-    # auto + forced-distributed: the star fallback must rescue it
+    # distributed path forced: the star fallback must rescue it
     got = {
         (r.id, r.cluster_id)
         for r in cl.connected_components(
@@ -79,7 +83,12 @@ def test_star_labels_match_hashmin_on_random_graph(spark):
         for _ in range(150)
     ]
     rows = [(a, b) for a, b in rows if a != b]
-    hm = sorted(
+    cp = _edges(spark, rows)
+    hm = sorted(map(tuple, cl._hashmin_labels(cp, 25).collect()))
+    st = sorted(map(tuple, cl._star_labels(cp).collect()))
+    assert hm == st
+    # the distributed policy (hash-min converges here) agrees with both
+    dist = sorted(
         map(
             tuple,
             cl.connected_components(
@@ -87,13 +96,7 @@ def test_star_labels_match_hashmin_on_random_graph(spark):
             ).collect(),
         )
     )
-    st = sorted(
-        map(
-            tuple,
-            cl.connected_components(_pairs(spark, rows), algorithm="star").collect(),
-        )
-    )
-    assert hm == st
+    assert dist == hm
     # the default (bounded union-find fast path) must agree with both
     uf = sorted(
         map(tuple, cl.connected_components(_pairs(spark, rows)).collect())
@@ -104,7 +107,7 @@ def test_star_labels_match_hashmin_on_random_graph(spark):
 def test_star_converges_on_10k_node_chain(spark):
     """The high-diameter case hash-min cannot finish (VERDICT r2 task
     #5): a 10k-node path has diameter 9999, but star contraction is
-    O(log²n) rounds, so algorithm='auto' must converge and label every
+    O(log²n) rounds, so the star fallback must converge and label every
     node with the chain minimum."""
     n = 10_000
     chain = _pairs(spark, [(i, i + 1) for i in range(1, n)])
@@ -194,6 +197,38 @@ def test_unionfind_fast_path_matches_distributed_incl_self_pairs(spark):
         )
     )
     assert over == fast
+
+
+def test_small_graph_threshold_boundary(spark, monkeypatch):
+    """At ``small_graph_threshold`` equal to the edge count the labels
+    come from driver-side union-find; one below, from the distributed
+    path. Both label sets are identical, self-pair-only vertex
+    included."""
+    rows = [(1, 2), (2, 3), (7, 8), (9, 9), (3, 1)]
+    n = len(rows)
+    calls = []
+    for name in ("_unionfind_labels", "_hashmin_labels"):
+        real = getattr(cl, name)
+
+        def spy(*args, _real=real, _name=name):
+            calls.append(_name)
+            return _real(*args)
+
+        monkeypatch.setattr(cl, name, spy)
+    got = {}
+    for th, path in ((n, "_unionfind_labels"), (n - 1, "_hashmin_labels")):
+        calls.clear()
+        got[th] = sorted(
+            map(
+                tuple,
+                cl.connected_components(
+                    _pairs(spark, rows), small_graph_threshold=th
+                ).collect(),
+            )
+        )
+        assert calls == [path], th
+    assert got[n] == got[n - 1]
+    assert got[n] == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7), (9, 9)]
 
 
 def test_unionfind_tolerates_null_endpoints(spark):

@@ -5,12 +5,59 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from real_estate_bigdata_spark.functions.text import (
+    hashed_ngrams_from_token_hashes,
+    tokenize,
+)
 from real_estate_bigdata_spark.operators import dedup as dd
 from real_estate_bigdata_spark.operators import sampling as sp_sampling
 from real_estate_bigdata_spark.operators import similarity as sim
 from real_estate_bigdata_spark.schema import load_table
 
 SF = "/root/testdata/sf0.01"
+
+
+def _simhash64_spec(text_col, n: int = 2):
+    """Per-row 64-bit SimHash Column over word n-gram features — the
+    spec the numpy kernel behind ``dd.simhash_signatures`` is pinned
+    against.
+
+    Classic bit-voting: for each of 64 bit positions, sum +1/-1 votes of
+    each feature's hash bit; sign -> bit. Features are hashed n-grams
+    built from per-token xxhash64 with a rolling n-wise combine (same
+    construction as ``dd._hashed_shingles``, duplicates kept so they
+    vote repeatedly).
+    """
+    toks = tokenize(text_col)
+    th = F.transform(toks, lambda t: F.xxhash64(t))
+    hashes = hashed_ngrams_from_token_hashes(th, n)
+    bit_votes = [
+        F.aggregate(
+            hashes,
+            F.lit(0),
+            lambda acc, h: acc
+            + F.when(
+                h.bitwiseAND(F.shiftleft(F.lit(1).cast("bigint"), i)) != 0, 1
+            ).otherwise(-1),
+        )
+        for i in range(64)
+    ]
+    out = F.lit(0).cast("bigint")
+    for i, v in enumerate(bit_votes):
+        out = out + F.when(v > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(0)
+    return out
+
+
+def _minhash_signature_spec(shingles, num_hashes: int = 32):
+    """Per-row MinHash signature Column -> array<bigint> of length
+    ``num_hashes``: lane i is ``min(xxhash64(shingle, seed=i))`` over
+    the doc's shingle set. Empty shingle set -> array of NULLs."""
+    return F.array(
+        *[
+            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
+            for i in range(num_hashes)
+        ]
+    )
 
 
 def test_minhash_lsh_finds_planted_neardups(spark):
@@ -78,8 +125,8 @@ def test_simhash_deterministic_and_neardup_sensitive(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], "doc_id long, text string"
     )
-    sigs1 = {r.doc_id: r.s for r in df.select("doc_id", dd.simhash64(F.col("text")).alias("s")).collect()}
-    sigs2 = {r.doc_id: r.s for r in df.select("doc_id", dd.simhash64(F.col("text")).alias("s")).collect()}
+    sigs1 = {r.doc_id: r.s for r in df.select("doc_id", _simhash64_spec(F.col("text")).alias("s")).collect()}
+    sigs2 = {r.doc_id: r.s for r in df.select("doc_id", _simhash64_spec(F.col("text")).alias("s")).collect()}
     assert sigs1 == sigs2  # deterministic across runs
     ham = lambda a, b: bin(a ^ b).count("1")
     assert ham(sigs1[1], sigs1[2]) < ham(sigs1[1], sigs1[3])
@@ -99,17 +146,16 @@ def test_simhash_signatures_match_per_row_spec(spark):
         ],
         "doc_id long, text string",
     )
-    spec = {r.doc_id: r.s for r in df.select("doc_id", dd.simhash64(F.col("text")).alias("s")).collect()}
+    spec = {r.doc_id: r.s for r in df.select("doc_id", _simhash64_spec(F.col("text")).alias("s")).collect()}
     fast = {r.doc_id: r.sim for r in dd.simhash_signatures(df).collect()}
     assert fast == spec
 
 
 def test_minhash_agg_signatures_match_per_row_spec(spark):
     """The exploded/group-by minhash signature (minhash_lsh_pairs'
-    formulation) must equal the per-row Column spec in
-    functions.text.minhash_signature applied to the same hashed-shingle
+    formulation) must equal the per-row Column spec
+    ``_minhash_signature_spec`` applied to the same hashed-shingle
     arrays."""
-    from real_estate_bigdata_spark.functions.text import minhash_signature
     from real_estate_bigdata_spark.operators.dedup import _hashed_shingles
 
     df = spark.createDataFrame(
@@ -120,7 +166,7 @@ def test_minhash_agg_signatures_match_per_row_spec(spark):
     spec = {
         r.doc_id: r.sig
         for r in hsh.select(
-            "doc_id", minhash_signature(F.col("hs"), 16).alias("sig")
+            "doc_id", _minhash_signature_spec(F.col("hs"), 16).alias("sig")
         ).collect()
     }
     agg = (

@@ -78,6 +78,35 @@ def test_kafka_fanout_fails_before_start_without_connector(spark, tmp_path):
     assert len(spark.streams.active) == before
 
 
+def test_kafka_stream_sink_fails_at_start_without_connector(spark, tmp_path):
+    """The S4 producer sink over a Kafka-shaped envelope stream: without
+    the connector, ``.start()`` raises the data-source-not-found error
+    and leaves no query running."""
+    if kafka_connector_available(spark):
+        pytest.skip("connector present here — the live smoke covers this")
+    from real_estate_bigdata_spark.schema import RAW_LISTING_SCHEMA
+    from real_estate_bigdata_spark.sources.kafka import kafka_stream_sink
+    from real_estate_bigdata_spark.streaming import speed_layer as sl
+
+    raw = spark.createDataFrame(
+        [tuple(RAW_REC[f.name] for f in RAW_LISTING_SCHEMA.fields)],
+        RAW_LISTING_SCHEMA,
+    )
+    env_path = str(tmp_path / "envelopes")
+    sl.write_kafka_envelopes(raw, env_path)
+    envelopes = sl.kafka_envelope_file_source(spark, env_path)
+    writer = kafka_stream_sink(
+        envelopes.select("key", "value"),
+        "localhost:9092",
+        "alonhadat",
+        str(tmp_path / "ckpt"),
+    )
+    before = len(spark.streams.active)
+    with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND|Failed to find"):
+        writer.start()
+    assert len(spark.streams.active) == before
+
+
 @pytest.mark.skipif(
     not BOOTSTRAP,
     reason="live Kafka smoke needs KAFKA_BOOTSTRAP=<broker> (no broker "

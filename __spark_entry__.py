@@ -30,24 +30,8 @@ from real_estate_bigdata_spark.operators import temporal as tm
 from real_estate_bigdata_spark.operators import text_analysis as ta
 from real_estate_bigdata_spark.operators import windows as win
 from real_estate_bigdata_spark.schema import RAW_LISTING_SCHEMA, load_table, load_tables
-from real_estate_bigdata_spark.util import local_frame
+from real_estate_bigdata_spark.util import concurrently, local_frame
 
-
-def _concurrently(*fns):
-    """Build independent DataFrame pipelines in parallel driver threads
-    (guide §2.6): an operator call that eagerly localCheckpoints its
-    intermediate blocks the calling thread in a Spark job, so two
-    independent generator calls issued sequentially serialize their
-    materialization jobs even when the cluster has idle capacity. The
-    threads only overlap SPARK JOBS (the GIL releases on the py4j
-    socket); results and semantics are untouched — this is the
-    scheduler back-fill pattern the optimization guide prescribes for
-    independent work."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(f) for f in fns]
-        return [f.result() for f in futures]
 
 # --------------------------------------------------------------------------
 # Listing-normalization parity corpus (FIXTURES.md §5). The same rows feed
@@ -547,7 +531,7 @@ def _q_embed_ivfpq_topk(spark, sf):
     # r16: the coarse-quantizer and product-quantizer fits are
     # independent (each samples + fits driver-side) — overlap their
     # sample jobs and fits in driver threads (guide §2.6)
-    idx, cb = _concurrently(
+    idx, cb = concurrently(
         lambda: sim.build_ivf_index(emb, n_lists=16),
         lambda: sim.train_pq(emb, m=8, ksub=32),
     )
@@ -999,7 +983,7 @@ def _q_pair_set_quality(spark, sf):
     # aggregate; jaccard shingle table) are independent — build them in
     # parallel threads so the second materialization back-fills idle
     # cores instead of queueing behind the first (guide §2.6)
-    pred, truth = _concurrently(
+    pred, truth = concurrently(
         lambda: dd.simhash_pairs(docs, max_hamming=7, bands=8, portable=True),
         lambda: dd.ngram_jaccard_pairs(docs, n=3, threshold=0.8),
     )
@@ -2332,7 +2316,7 @@ def _q_record_linkage(spark, sf):
     # r16: the two evidence channels' eager checkpoint jobs (fuzzy
     # variant table; geo point frame) are independent — overlap them
     # (guide §2.6)
-    name_pairs, geo_pairs = _concurrently(
+    name_pairs, geo_pairs = concurrently(
         lambda: fz.edit_distance_pairs(
             cust, "c_custkey", "c_name", max_distance=1
         ),

@@ -39,7 +39,11 @@ from real_estate_bigdata_spark.functions.text import (
     word_ngrams,
 )
 from real_estate_bigdata_spark.functions.vectors import cosine_from_norms, l2_norm
-from real_estate_bigdata_spark.util import checkpoint_frame, ensure_min_parallelism
+from real_estate_bigdata_spark.util import (
+    checkpoint_frame,
+    concurrently,
+    ensure_min_parallelism,
+)
 
 __all__ = [
     "exact_dup_groups",
@@ -1710,16 +1714,12 @@ def cross_corpus_lsh_pairs(
     # sides' materialization jobs are independent, so they run in
     # parallel driver threads (guide §2.6) — the second side back-fills
     # cores the first side's job tail leaves idle; results untouched.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _cp(side: DataFrame) -> DataFrame:
         return checkpoint_frame(
             _hashed_shingles(side, n, id_col, text_col), materialize
         )
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fa, _fb = _pool.submit(_cp, a), _pool.submit(_cp, b)
-        hsh_a, hsh_b = _fa.result(), _fb.result()
+    hsh_a, hsh_b = concurrently(lambda: _cp(a), lambda: _cp(b))
     bands_a = _band_keys(
         _minhash_signatures(hsh_a, num_hashes, id_col), bands, rows_per_band, id_col
     ).select(F.col(id_col).alias("id_a"), "band", "bucket")

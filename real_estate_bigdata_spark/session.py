@@ -10,6 +10,10 @@ and relies on defaults. We pin the settings that matter at scale:
   use the core count; a real cluster overrides to ~2-3x total cores).
 - Parquet pushdown knobs left at defaults (on) — predicate pushdown and
   column pruning are load-bearing for the scan-heavy queries.
+- The Python worker daemon is ``worker_daemon`` — PySpark's daemon
+  without the per-task re-read of ``pyspark.zip``'s directory, which
+  cost every Python task 0.15-0.2 s on CPython < 3.13 (every
+  ``mapInPandas`` kernel and Python UDF task paid it).
 """
 
 from __future__ import annotations
@@ -46,6 +50,19 @@ def get_spark(
     ``spark.conf.set`` AFTER materializing this package's results —
     there is deliberately no opt-out, because a non-UTC session would
     silently shift every timestamp the engine reads.
+
+    Python-worker contract: the factory pins
+    ``spark.python.daemon.module=real_estate_bigdata_spark.worker_daemon``.
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task, and on CPython < 3.13 each ``zipimporter`` into ``pyspark.zip``
+    then re-reads the archive's central directory (about 26,700 entries
+    a task). The engine's daemon re-reads an archive only when it changed
+    on disk (module docstring of ``worker_daemon``). Deployment
+    requirement: executors must be able to import this package when the
+    daemon starts (installed, on ``PYTHONPATH``, or in the working
+    directory). The kernels already require it, because their closures
+    pickle package functions by reference. A session built elsewhere
+    (``getOrCreate`` over an existing SparkContext) keeps its own daemon.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -73,6 +90,11 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's daemon minus the per-task zip directory re-read
+        # (worker_daemon's docstring); the package must import on executors
+        .config(
+            "spark.python.daemon.module", "real_estate_bigdata_spark.worker_daemon"
+        )
         # Some testdata generations encode events.ts as parquet
         # TIMESTAMP(NANOS), which the vectorized reader rejects; with this
         # conf the column surfaces as raw int64 nanos and schema.load_table

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame
 
 __all__ = [
     "checkpoint_frame",
+    "concurrently",
     "delete_dir",
     "ensure_min_parallelism",
     "finish_pending_dir_swap",
@@ -65,6 +66,32 @@ def checkpoint_frame(df: DataFrame, materialize: str | None = None) -> DataFrame
     raise ValueError(
         f"unknown materialize mode {mode!r} — use 'local' or 'reliable'"
     )
+
+
+def concurrently(*fns):
+    """Run independent DataFrame builds in parallel driver threads and
+    return their results in order (guide §2.6): an operator call that
+    eagerly checkpoints blocks its thread in a Spark job, so two
+    independent builds issued sequentially serialize their
+    materialization jobs even when cores are idle. The threads only
+    overlap Spark jobs (the GIL releases on the py4j socket).
+
+    Each function runs under ``pyspark.inheritable_thread_target``, so
+    the jobs it starts carry the caller's local properties (job group,
+    description, scheduler pool) and tags: ``cancelJobGroup`` reaches
+    them, and they land in the caller's pool."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.active()
+    # one wrapper per function: each clones the caller's properties, so
+    # a thread that changes its own never leaks into its sibling
+    targets = [inheritable_thread_target(spark)(f) for f in fns]
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(t) for t in targets]
+        return [f.result() for f in futures]
 
 
 def local_frame(spark, rows, schema) -> DataFrame:

@@ -41,7 +41,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from real_estate_bigdata_spark.functions.text import tokenize
-from real_estate_bigdata_spark.util import ensure_min_parallelism
+from real_estate_bigdata_spark.util import (
+    bounded_collect,
+    checkpoint_frame,
+    ensure_min_parallelism,
+)
 
 __all__ = [
     "train_bpe_batched",
@@ -379,16 +383,10 @@ def train_bpe_batched(
         raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    words = _word_table(docs, text_col, max_vocab_words).localCheckpoint(
-        eager=True
-    )
+    words = checkpoint_frame(_word_table(docs, text_col, max_vocab_words))
     if small_vocab_threshold > 0:
-        head = (
-            words.select("word", "cnt")
-            .limit(small_vocab_threshold + 1)
-            .collect()
-        )
-        if len(head) <= small_vocab_threshold and all(
+        head = bounded_collect(words.select("word", "cnt"), small_vocab_threshold)
+        if head is not None and all(
             (not r["word"]) or max(r["word"]) <= "\uffff" for r in head
         ):
             merges = _train_bpe_local(
@@ -428,7 +426,7 @@ def train_bpe_batched(
             )
             since_checkpoint += 1
             if since_checkpoint >= checkpoint_every:
-                words = words.localCheckpoint(eager=True)
+                words = checkpoint_frame(words)
                 since_checkpoint = 0
     if stats is not None:
         stats["round_trips"] = round_trips
@@ -487,7 +485,7 @@ def bpe_encode(
             "symbols", _apply_merge(F.col("symbols"), left, right)
         )
         if (i + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=True)
+            words = checkpoint_frame(words)
     exploded = base.select(
         F.col(id_col), F.posexplode("__toks").alias("__pos", "word")
     ).filter(F.length("word") > 0)

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from real_estate_bigdata_spark.util import local_frame
+from real_estate_bigdata_spark.util import bounded_collect, checkpoint_frame, local_frame
 
 __all__ = [
     "connected_components",
@@ -107,18 +107,12 @@ def connected_components(
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     a, b = F.col(src), F.col(dst)
-    cp = pairs.select(a.alias("u"), b.alias("v")).localCheckpoint(eager=True)
+    cp = checkpoint_frame(pairs.select(a.alias("u"), b.alias("v")))
 
     if small_graph_threshold > 0:
-        # ONE bounded collect replaces the r13 probe-count + collect
-        # pair (VERDICT r15 task #3): if LIMIT threshold+1 returns at
-        # most threshold rows, those rows ARE the whole edge set — the
-        # separate count job re-scanned the checkpoint for nothing. The
-        # over-threshold case hauls threshold+1 rows (a few MB at the
-        # default) to the driver and discards them; both scans read the
-        # already-materialized checkpoint, never the upstream plan.
-        rows = cp.limit(small_graph_threshold + 1).collect()
-        if len(rows) <= small_graph_threshold:
+        # the probe reads the checkpoint, never the upstream plan
+        rows = bounded_collect(cp, small_graph_threshold)
+        if rows is not None:
             return _unionfind_labels(cp, rows, out_id, out_label)
 
     labels = _hashmin_labels(cp, max_iter)
@@ -187,9 +181,9 @@ def _hashmin_labels(cp: DataFrame, max_iter: int) -> DataFrame | None:
     no extra change-count join.
     """
     edges = cp.unionAll(cp.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    labels = (
+    labels = checkpoint_frame(
         edges.select("u").distinct().select(F.col("u").alias("id"), F.col("u").alias("label"))
-    ).localCheckpoint(eager=True)
+    )
     prev_sum = labels.agg(F.sum("label")).first()[0]
 
     for _ in range(max_iter + 1):
@@ -198,7 +192,7 @@ def _hashmin_labels(cp: DataFrame, max_iter: int) -> DataFrame | None:
             .groupBy("u")
             .agg(F.min("label").alias("nbr_min"))
         )
-        labels = (
+        labels = checkpoint_frame(
             labels.join(nbr, labels["id"] == nbr["u"], "left")
             .select(
                 F.col("id"),
@@ -206,7 +200,6 @@ def _hashmin_labels(cp: DataFrame, max_iter: int) -> DataFrame | None:
                     F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
@@ -253,14 +246,13 @@ def _star_labels(cp: DataFrame) -> DataFrame:
         .distinct()
     )
     # canonical orientation (big, small), no self-loops
-    edges = (
+    edges = checkpoint_frame(
         cp.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"),
             F.least("u", "v").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     for _ in range(_STAR_MAX_ROUNDS):
@@ -281,12 +273,11 @@ def _star_labels(cp: DataFrame) -> DataFrame:
         # ---- small-star (input already oriented u > v) ----
         sm = large.groupBy("u").agg(F.min("v").alias("m"))
         joined = large.join(sm, "u")
-        small = (
+        small = checkpoint_frame(
             joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionAll(joined.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         n_prev, n_cur = edges.count(), small.count()
         if n_prev == n_cur and small.exceptAll(edges).isEmpty():
@@ -498,8 +489,8 @@ def pagerank(
         spark = edges.sparkSession
         id_t = raw.schema["__s"].dataType.simpleString()
         out_schema = f"node {id_t}, rank double"
-        rows = raw.limit(small_edges_threshold + 1).collect()
-        if len(rows) <= small_edges_threshold:
+        rows = bounded_collect(raw, small_edges_threshold)
+        if rows is not None:
             if not rows:
                 return spark.createDataFrame([], out_schema)
             deduped = sorted({(r["__s"], r["__d"]) for r in rows})
@@ -527,19 +518,10 @@ def pagerank(
     spark = edges.sparkSession
     id_t = e.schema["__s"].dataType.simpleString()
     out_schema = f"node {id_t}, rank double"
-    # r16 (VERDICT r15 task #4): ONE bounded collect replaces the r13
-    # probe-count + collect pair — each of those evaluated the FULL
-    # edge-distinct aggregation (e is deliberately unmaterialized
-    # here), so the fast path paid the edge pipeline twice plus two
-    # driver round-trips. LIMIT threshold+1 returning <= threshold
-    # rows means those rows ARE the edge set. The price is the
-    # over-threshold case hauling threshold+1 rows to the driver to
-    # discard them (bounded by construction — the same LIMIT-k+1
-    # idiom as connected_components; at the 2M default that is a
-    # one-time ~tens-of-MB transfer on the path that then runs a
-    # multi-round distributed loop anyway).
-    rows = e.limit(small_edges_threshold + 1).collect()
-    if len(rows) <= small_edges_threshold:
+    # e is deliberately unmaterialized here: the probe evaluates the
+    # edge aggregation once, and only the distributed loop checkpoints
+    rows = bounded_collect(e, small_edges_threshold)
+    if rows is not None:
         if not rows:
             return spark.createDataFrame([], out_schema)
         # Arrow-backed local frame: callers re-scan the rank table
@@ -548,23 +530,23 @@ def pagerank(
         return local_frame(
             spark, _pagerank_numpy(rows, damping, max_iter, tol), out_schema
         )
-    e = e.localCheckpoint(eager=True)
-    nodes = (
+    e = checkpoint_frame(e)
+    nodes = checkpoint_frame(
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
         .distinct()
-    ).localCheckpoint(eager=True)
+    )
     n = nodes.count()
     deg = e.groupBy(F.col("__s").alias("node")).agg(
         F.sum("__w").alias("__deg")
     )
     # (node, deg) with 0 for dangling — reused every round
-    nd = nodes.join(deg, "node", "left").select(
-        "node", F.coalesce("__deg", F.lit(0.0)).alias("__deg")
-    ).localCheckpoint(eager=True)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("__r")).localCheckpoint(
-        eager=True
+    nd = checkpoint_frame(
+        nodes.join(deg, "node", "left").select(
+            "node", F.coalesce("__deg", F.lit(0.0)).alias("__deg")
+        )
     )
+    ranks = checkpoint_frame(nodes.select("node", F.lit(1.0 / n).alias("__r")))
     teleport = (1.0 - damping) / n
     for _ in range(max_iter):
         rd = ranks.join(nd, "node")
@@ -584,7 +566,7 @@ def pagerank(
             .groupBy(F.col("__d").alias("node"))
             .agg(F.sum(F.col("__c") * F.col("__w")).alias("__in"))
         )
-        new_ranks = (
+        new_ranks = checkpoint_frame(
             nodes.join(inflow, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -598,7 +580,7 @@ def pagerank(
                     )
                 ).alias("__r"),
             )
-        ).localCheckpoint(eager=True)
+        )
         if tol is not None:
             delta = (
                 new_ranks.join(

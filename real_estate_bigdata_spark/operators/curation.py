@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from real_estate_bigdata_spark.functions.text import token_count
 from real_estate_bigdata_spark.operators.dedup import minhash_lsh_pairs
 from real_estate_bigdata_spark.operators.text_analysis import portable_fingerprint
+from real_estate_bigdata_spark.util import checkpoint_frame
 
 __all__ = ["curate_corpus"]
 
@@ -70,18 +71,18 @@ def curate_corpus(
     )
     # stage 1: min-id survivor per fingerprint
     w = Window.partitionBy("__fp").orderBy(F.col(id_col))
-    exact_kept = (
+    # Checkpoint: the exact-dedup result feeds every branch of the
+    # LSH pipeline (signatures, set sizes, posting explode) AND the
+    # final anti-join — 4+ traversals that would each re-run the
+    # scan + fingerprint window. Materialized once (MEMORY_AND_DISK
+    # semantics), lineage truncated; at cluster scale this is the
+    # standard stage boundary a 100 TB curation run would persist
+    # to the lake anyway.
+    exact_kept = checkpoint_frame(
         with_fp.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", "__fp")
-        # Checkpoint: the exact-dedup result feeds every branch of the
-        # LSH pipeline (signatures, set sizes, posting explode) AND the
-        # final anti-join — 4+ traversals that would each re-run the
-        # scan + fingerprint window. Materialized once (MEMORY_AND_DISK
-        # semantics), lineage truncated; at cluster scale this is the
-        # standard stage boundary a 100 TB curation run would persist
-        # to the lake anyway.
-        .localCheckpoint(eager=False)
+        .drop("__rn", "__fp"),
+        eager=False,
     )
     # stage 2: LSH near-dup pairs among exact survivors; later id drops
     pairs = minhash_lsh_pairs(

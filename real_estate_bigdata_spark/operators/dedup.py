@@ -331,7 +331,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_posting_len: int | None = None,
-    materialize: str | None = None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard near-dup pairs (id_a < id_b, jaccard).
 
@@ -353,9 +352,7 @@ def ngram_jaccard_pairs(
     # primitive longs (a struct-carried size variant measured slower —
     # interpreted struct array_sort) while both the posting stream and
     # the broadcast size sides read the materialization.
-    hsh = checkpoint_frame(
-        _hashed_shingles(docs, n, id_col, text_col), materialize
-    )
+    hsh = checkpoint_frame(_hashed_shingles(docs, n, id_col, text_col))
     sizes = hsh.select(F.col(id_col), F.size("hs").alias("n_sh"))
     exploded = hsh.select(F.col(id_col), F.explode("hs").alias("g"))
     inter = _posting_pairs(exploded, id_col, max_posting_len)
@@ -384,7 +381,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_posting_len: int | None = None,
-    materialize: str | None = None,
 ) -> DataFrame:
     """Exact word-n-gram CONTAINMENT near-dup pairs — the asymmetric
     relationship Jaccard structurally misses: a short document quoted
@@ -412,9 +408,7 @@ def ngram_containment_pairs(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # one tokenize+hash pass via the shared checkpoint — see
     # ngram_jaccard_pairs
-    hsh = checkpoint_frame(
-        _hashed_shingles(docs, n, id_col, text_col), materialize
-    )
+    hsh = checkpoint_frame(_hashed_shingles(docs, n, id_col, text_col))
     sizes = hsh.select(F.col(id_col), F.size("hs").alias("n_sh"))
     exploded = hsh.select(F.col(id_col), F.explode("hs").alias("g"))
     inter = _posting_pairs(exploded, id_col, max_posting_len)
@@ -552,7 +546,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: str | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
 
@@ -588,16 +581,12 @@ def minhash_lsh_pairs(
     # r15: the shingle table feeds THREE consumers (the signature
     # aggregate and both verify sides), and unmaterialized lineage ran
     # the tokenize+hash pipeline once per consumer — checkpoint once.
-    hsh = checkpoint_frame(
-        _hashed_shingles(docs, n, id_col, text_col), materialize
-    )
+    hsh = checkpoint_frame(_hashed_shingles(docs, n, id_col, text_col))
     # r16: the numpy-kernel signature (see _minhash_signatures) has no
     # exchange for the band self-join's two sides to reuse — without a
     # materialization each side would re-run the whole kernel pipeline.
     # The (id, 64xbigint) frame is small (~0.5 KB/doc, payload-free).
-    sig = checkpoint_frame(
-        _minhash_signatures(hsh, num_hashes, id_col), materialize
-    )
+    sig = checkpoint_frame(_minhash_signatures(hsh, num_hashes, id_col))
     banded = _band_keys(sig, bands, rows_per_band, id_col)
     left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
@@ -718,7 +707,6 @@ def simhash_pairs(
     text_col: str = "text",
     bands: int = 4,
     portable: bool = False,
-    materialize: str | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: banded blocking (a pair within Hamming
     distance ``max_hamming`` <= bands-1 must agree exactly on >=1 of
@@ -748,8 +736,7 @@ def simhash_pairs(
     sig = checkpoint_frame(
         simhash_signatures(
             docs, n=n, id_col=id_col, text_col=text_col, portable=portable
-        ),
-        materialize,
+        )
     )
     return hamming_banded_pairs(
         sig, sig_col="sim", max_hamming=max_hamming, bands=bands, id_col=id_col
@@ -1252,7 +1239,7 @@ def embedding_neardup_pairs_pca(
     # materialize (id, raw, projected) ONCE: the sample pass and the
     # probe/assignment pass both scan it, and re-evaluating the k x d
     # projection expression per scan measured 5x at sf0.1
-    both = (
+    both = checkpoint_frame(
         # Arrow/BLAS projection, not the Column-HOF form: Catalyst
         # interprets HOF lambdas per element, which at fat widths
         # (d=768/k=64) measured ~30 s per 2000 rows vs milliseconds
@@ -1267,8 +1254,8 @@ def embedding_neardup_pairs_pca(
             F.col("v").isNotNull()
             & (F.size("v") == model.dim)
             & F.col("__pv").isNotNull()
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     sample, _ = _deterministic_vector_sample(
         both, "vid", "__pv", seed, 100_000, caller="embedding_neardup_pairs_pca"
@@ -1502,7 +1489,6 @@ def neardup_against_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     return_additions: bool = False,
-    materialize: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental NEAR-duplicate dedup for continuous ingest: drop
     every new document whose MinHash signature says it near-duplicates
@@ -1590,9 +1576,7 @@ def neardup_against_store(
     # five references. The pre-r16 aggregate's exchange was reused
     # across all of them; the numpy-kernel signature has no exchange,
     # so materialize it once instead of re-tokenizing per reference.
-    sig = checkpoint_frame(
-        _minhash_signatures(hsh, num_hashes, id_col), materialize
-    )
+    sig = checkpoint_frame(_minhash_signatures(hsh, num_hashes, id_col))
     batch_bands = _band_keys(sig, bands, rows_per_band, id_col)
 
     est = F.round(
@@ -1679,7 +1663,6 @@ def cross_corpus_lsh_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: str | None = None,
 ) -> DataFrame:
     """Document-level near-duplicate pairs ACROSS two corpora — "which
     of my training documents near-duplicate a benchmark / another
@@ -1715,9 +1698,7 @@ def cross_corpus_lsh_pairs(
     # parallel driver threads (guide §2.6) — the second side back-fills
     # cores the first side's job tail leaves idle; results untouched.
     def _cp(side: DataFrame) -> DataFrame:
-        return checkpoint_frame(
-            _hashed_shingles(side, n, id_col, text_col), materialize
-        )
+        return checkpoint_frame(_hashed_shingles(side, n, id_col, text_col))
 
     hsh_a, hsh_b = concurrently(lambda: _cp(a), lambda: _cp(b))
     bands_a = _band_keys(
@@ -1737,7 +1718,6 @@ def novelty_scores(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: str | None = None,
 ) -> DataFrame:
     """Per-document content novelty: the fraction of a doc's DISTINCT
     word-``n``-grams whose global first occurrence (minimum owning doc
@@ -1779,9 +1759,7 @@ def novelty_scores(
     # (id, n_grams, hs) materialized ONCE: both the gram stream and the
     # per-doc sizes read it, where the r14 plan ran the tokenize+hash
     # pipeline once per consumer
-    hsh = checkpoint_frame(
-        _hashed_shingles(base, n, id_col, text_col), materialize
-    )
+    hsh = checkpoint_frame(_hashed_shingles(base, n, id_col, text_col))
     grams = hsh.select(F.col(id_col), F.explode("hs").alias("g"))
     first = grams.groupBy("g").agg(F.min(id_col).alias("__first_id"))
     novel = first.groupBy(F.col("__first_id").alias(id_col)).agg(

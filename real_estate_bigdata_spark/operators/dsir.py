@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_estate_bigdata_spark.functions.text import portable_hash64, tokenize
-from real_estate_bigdata_spark.util import ensure_min_parallelism
+from real_estate_bigdata_spark.util import checkpoint_frame, ensure_min_parallelism
 
 __all__ = ["dsir_logweights", "dsir_select"]
 
@@ -134,11 +134,10 @@ def dsir_logweights(
     # re-run the corpus-sized tokenize+explode+md5 pass (measured 2x
     # at sf0.1; at 100 TB the doc x distinct-bucket frame this pins is
     # far smaller than the gram stream it replaces)
-    occ = (
+    occ = checkpoint_frame(
         _gram_buckets(raw, id_col, text_col, n_buckets)
         .groupBy(id_col, "__bucket")
         .agg(F.count("*").cast("double").alias("__cnt"))
-        .localCheckpoint(eager=True)
     )
     raw_cnt = occ.groupBy("__bucket").agg(
         F.sum("__cnt").alias("__q_cnt")

@@ -41,7 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from real_estate_bigdata_spark.util import local_frame
+from real_estate_bigdata_spark.util import bounded_collect, checkpoint_frame, local_frame
 
 __all__ = [
     "auc_score",
@@ -725,7 +725,7 @@ def _alpha_cells(df: DataFrame, item_col: str, category_col: str) -> DataFrame:
     # driver query before this). localCheckpoint, not persist, for the
     # same session-lifetime reason as image_neardup_pairs; the frame is
     # bounded by items x categories, strictly <= the ratings count.
-    return (
+    return checkpoint_frame(
         df.filter(
             F.col(item_col).isNotNull() & F.col(category_col).isNotNull()
         )
@@ -733,7 +733,7 @@ def _alpha_cells(df: DataFrame, item_col: str, category_col: str) -> DataFrame:
             F.col(item_col).alias("__i"), F.col(category_col).alias("__k")
         )
         .agg(F.count(F.lit(1)).cast("double").alias("__c"))
-    ).localCheckpoint(eager=True)
+    )
 
 
 def _alpha_from_cells(cells: DataFrame, metric: str) -> DataFrame:
@@ -925,7 +925,7 @@ def item_disagreement(
     # same one-touch contract as krippendorff_alpha: the cells frame is
     # referenced by units AND (interval) both pair sides — materialize
     # once so the ratings corpus is aggregated exactly once per call
-    cells = (
+    cells = checkpoint_frame(
         df.filter(
             F.col(item_col).isNotNull() & F.col(category_col).isNotNull()
         )
@@ -933,7 +933,7 @@ def item_disagreement(
             F.col(item_col).alias("__i"), F.col(category_col).alias("__k")
         )
         .agg(F.count(F.lit(1)).cast("double").alias("__c"))
-    ).localCheckpoint(eager=True)
+    )
     units = (
         cells.groupBy("__i")
         .agg(
@@ -1021,7 +1021,7 @@ def rater_reliability(
     # leave-one-out adjustment an exact minus-1
     # materialized once (the vote table feeds both the per-category
     # counts and the LOO join — one-touch, as in krippendorff_alpha)
-    valid = (
+    valid = checkpoint_frame(
         df.filter(
             F.col(item_col).isNotNull()
             & F.col(rater_col).isNotNull()
@@ -1033,7 +1033,7 @@ def rater_reliability(
             F.col(category_col).alias("__k"),
         )
         .distinct()
-    ).localCheckpoint(eager=True)
+    )
     votes = valid.groupBy("__i", F.col("__k").alias("__vk")).agg(
         F.count(F.lit(1)).cast("double").alias("__c")
     )
@@ -1258,7 +1258,7 @@ def dawid_skene(
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
-    valid = (
+    valid = checkpoint_frame(
         df.filter(
             F.col(item_col).isNotNull()
             & F.col(rater_col).isNotNull()
@@ -1270,7 +1270,7 @@ def dawid_skene(
             F.col(category_col).alias("__k"),
         )
         .distinct()
-    ).localCheckpoint(eager=True)
+    )
     cats = sorted(
         r[0] for r in valid.select("__k").distinct().collect()
     )  # bounded: a labeling taxonomy, not data
@@ -1296,16 +1296,10 @@ def dawid_skene(
         f"label {valid.schema['__k'].dataType.simpleString()}, "
         f"confidence double, n_ratings long"
     )
-    # ONE bounded collect replaces the r12 probe-count + countDistinct
-    # + collect triple (three jobs against the vote checkpoint): LIMIT
-    # threshold+1 returning <= threshold rows means those rows ARE the
-    # vote set, and the rater cardinality for the dense-state budget
-    # reads off the collected rows driver-side (identical value). The
-    # budget-fail case (many raters x classes) discards an
-    # already-hauled <= threshold+1-row collect — the LIMIT-k+1 trade
-    # connected_components/pagerank document, bounded by construction.
-    rows = valid.limit(small_votes_threshold + 1).collect()
-    if len(rows) <= small_votes_threshold:
+    # the rater cardinality for the dense-state budget reads off the
+    # probed rows driver-side; the budget-fail case discards them
+    rows = bounded_collect(valid, small_votes_threshold)
+    if rows is not None:
         # dense-state budget: theta is raters*classes^2 doubles and the
         # vectorized E-step expands votes*classes — cap the sum at
         # ~48M doubles (~400 MB of temporaries) before going dense.
@@ -1330,7 +1324,7 @@ def dawid_skene(
         valid.groupBy("__i", F.col("__k").alias("__c"))
         .agg(F.count(F.lit(1)).cast("double").alias("__v"))
     )
-    post = (
+    post = checkpoint_frame(
         n_items_votes.crossJoin(F.broadcast(cats_df))
         .join(share, ["__i", "__c"], "left")
         .select(
@@ -1340,7 +1334,7 @@ def dawid_skene(
                 "__p"
             ),
         )
-    ).localCheckpoint(eager=True)
+    )
     for _ in range(max_iter):
         # M-step: class priors (tiny) and rater confusions
         pri = post.groupBy("__c").agg(F.avg("__p").alias("__pri"))
@@ -1421,12 +1415,12 @@ def dawid_skene(
             )
         )
         w = Window.partitionBy("__i")
-        new_post = (
+        new_post = checkpoint_frame(
             logp.withColumn("__mx", F.max("__ll").over(w))
             .withColumn("__e", F.exp(F.col("__ll") - F.col("__mx")))
             .withColumn("__z", F.sum("__e").over(w))
             .select("__i", "__c", (F.col("__e") / F.col("__z")).alias("__p"))
-        ).localCheckpoint(eager=True)
+        )
         if tol is not None:
             delta = (
                 new_post.join(
@@ -2115,16 +2109,10 @@ def bradley_terry(
     # bounded fast path (the CC union-find precedent): when the
     # aggregated pair table fits, iterate in vectorized numpy on the
     # collected counts — strengths only, the payload never moves. The
-    # checkpoint stays on the distributed branch (r13); r16 collapses
-    # the r13 probe-count + collect pair (each evaluated the FULL pair
-    # aggregation) into ONE bounded collect: LIMIT threshold+1
-    # returning <= threshold rows means those rows ARE the pair table.
-    # The over-threshold case hauls threshold+1 aggregated rows to the
-    # driver and discards them — bounded by construction (the
-    # connected_components/pagerank LIMIT-k+1 trade).
+    # checkpoint stays on the distributed branch (r13).
     spark = comparisons.sparkSession
-    rows = pairs.limit(small_pairs_threshold + 1).collect()
-    if len(rows) <= small_pairs_threshold:
+    rows = bounded_collect(pairs, small_pairs_threshold)
+    if rows is not None:
         if not rows:
             return spark.createDataFrame(
                 [],
@@ -2156,7 +2144,7 @@ def bradley_terry(
             f"strength double, n_games long",
         )
     # distributed loop scans the pair table every round — materialize
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = checkpoint_frame(pairs)
     wins = (
         pairs.select(F.col("__i").alias("item"), F.col("__w").alias("w"))
         .unionByName(
@@ -2168,17 +2156,15 @@ def bradley_terry(
         .groupBy("item")
         .agg(F.sum("w").alias("__wins"))
     )
-    games = (
+    games = checkpoint_frame(
         pairs.select(F.col("__i").alias("item"), F.col("__n").alias("n"))
         .unionByName(
             pairs.select(F.col("__j").alias("item"), F.col("__n").alias("n"))
         )
         .groupBy("item")
         .agg(F.sum("n").cast("long").alias("n_games"))
-    ).localCheckpoint(eager=True)
-    scores = games.select("item", F.lit(1.0).alias("__s")).localCheckpoint(
-        eager=True
     )
+    scores = checkpoint_frame(games.select("item", F.lit(1.0).alias("__s")))
     half = F.lit(smoothing / 2.0)
     for _ in range(max_iter):
         si = scores.select(F.col("item").alias("__i"), F.col("__s").alias("__si"))
@@ -2217,10 +2203,9 @@ def bradley_terry(
         )
         # renormalize to mean 1 (identifiability)
         mean = new_scores.agg(F.avg("__s").alias("__m"))
-        scores = (
+        scores = checkpoint_frame(
             new_scores.crossJoin(F.broadcast(mean))
             .select("item", (F.col("__s") / F.col("__m")).alias("__s"))
-            .localCheckpoint(eager=True)
         )
     return (
         scores.join(games, "item")

@@ -152,7 +152,6 @@ def edit_distance_pairs(
     col: str,
     max_distance: int = 1,
     max_len: int | None = None,
-    materialize: str | None = None,
 ) -> DataFrame:
     """All unordered pairs of rows whose ``col`` strings are within
     Levenshtein distance ``max_distance`` — EXACT semantics (complete
@@ -180,8 +179,7 @@ def edit_distance_pairs(
     vars_df = checkpoint_frame(
         _variants(df, id_col, col, k, max_len).select(
             "__fid", "__fs", F.xxhash64("__fv").alias("__fh"), *pos_cols
-        ),
-        materialize,
+        )
     )
     a, b = vars_df.alias("a"), vars_df.alias("b")
     cond = (F.col("a.__fh") == F.col("b.__fh")) & (

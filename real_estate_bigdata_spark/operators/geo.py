@@ -116,7 +116,6 @@ def geo_radius_pairs(
     lon_col: str,
     radius_km: float,
     max_abs_lat: float = 75.0,
-    materialize: str | None = None,
 ) -> DataFrame:
     """All unordered pairs of rows within ``radius_km`` great-circle
     distance — EXACT semantics (the grid only prunes; haversine
@@ -147,8 +146,7 @@ def geo_radius_pairs(
             lon.alias("__glon"),
             F.floor(lat / cell_lat).cast("long").alias("__gcy"),
             F.floor(lon / cell_lon).cast("long").alias("__gcx"),
-        ),
-        materialize,
+        )
     )
     nine = F.array(
         *[

@@ -1174,7 +1174,6 @@ def image_neardup_pairs(
     bands: int = 8,
     use_pil: bool | None = None,
     sig: DataFrame | None = None,
-    materialize: str | None = None,
 ) -> DataFrame:
     """Near-duplicate image pairs: perceptual hash + the SAME banded
     Hamming blocking the text SimHash family uses
@@ -1202,24 +1201,18 @@ def image_neardup_pairs(
     action. Callers running several pair queries over one corpus should
     precompute :func:`image_phash` themselves and pass ``sig``.
 
-    Cluster posture caveat (ADVICE r6 #2): localCheckpoint blocks live
-    only on executors — they are NOT fault-tolerant. On a cluster with
-    preemptible/spot executors or aggressive dynamic allocation, losing
-    an executor mid-query fails the job instead of recomputing the lost
-    lineage. For those deployments, precompute the signature table and
-    WRITE it (``image_phash(...).write.parquet(...)``) — a reliable
-    store is the durable equivalent of the caller-supplied ``sig`` —
-    or set a reliable ``spark.sparkContext.setCheckpointDir`` and
-    ``.checkpoint()`` the signatures yourself before passing them in.
-    The same trade applies everywhere this engine localCheckpoints
-    (drift baselines, CC rounds): correctness is never at risk — only
-    job-restart cost on executor loss."""
+    Cluster posture: localCheckpoint blocks live only on executors and
+    are NOT fault-tolerant. The checkpoint goes through
+    :func:`util.checkpoint_frame`, so on preemptible/spot executors
+    the session conf ``spark.real_estate_bigdata.materialize=reliable``
+    (plus a checkpoint dir) makes it durable, like every other
+    checkpoint in the engine."""
     from real_estate_bigdata_spark.operators.dedup import hamming_banded_pairs
 
     if sig is None:
         from real_estate_bigdata_spark.util import checkpoint_frame
 
-        sig = checkpoint_frame(image_phash(media, use_pil=use_pil), materialize)
+        sig = checkpoint_frame(image_phash(media, use_pil=use_pil))
     return hamming_banded_pairs(
         sig, sig_col="phash", max_hamming=max_hamming, bands=bands,
         id_col="media_id",

@@ -27,6 +27,8 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from real_estate_bigdata_spark.util import checkpoint_frame
+
 __all__ = [
     "baseline_histogram",
     "c4_quality_filter",
@@ -705,12 +707,8 @@ def drift_from_histograms(
     k = n_bins + 2
     spark = h_old.sparkSession
     if group_col is None:
-        h_old = h_old.select(
-            "bin", F.col("n").alias("n_old")
-        ).localCheckpoint(eager=True)
-        h_new = h_new.select(
-            "bin", F.col("n").alias("n_new")
-        ).localCheckpoint(eager=True)
+        h_old = checkpoint_frame(h_old.select("bin", F.col("n").alias("n_old")))
+        h_new = checkpoint_frame(h_new.select("bin", F.col("n").alias("n_new")))
         bins = spark.range(0, k).select(F.col("id").alias("bin"))
         joined = (
             bins.join(h_old, "bin", "left")
@@ -723,12 +721,12 @@ def drift_from_histograms(
         joined = joined.crossJoin(F.broadcast(totals))
         group_cols = []
     else:
-        h_old = h_old.select(
-            group_col, "bin", F.col("n").alias("n_old")
-        ).localCheckpoint(eager=True)
-        h_new = h_new.select(
-            group_col, "bin", F.col("n").alias("n_new")
-        ).localCheckpoint(eager=True)
+        h_old = checkpoint_frame(
+            h_old.select(group_col, "bin", F.col("n").alias("n_old"))
+        )
+        h_new = checkpoint_frame(
+            h_new.select(group_col, "bin", F.col("n").alias("n_new"))
+        )
         groups = (
             h_old.select(group_col)
             .unionByName(h_new.select(group_col))

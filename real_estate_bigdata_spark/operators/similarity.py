@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_estate_bigdata_spark.functions.vectors import cosine_from_norms, l2_norm
+from real_estate_bigdata_spark.util import bounded_collect, checkpoint_frame
 
 __all__ = [
     "brute_force_topk",
@@ -167,17 +168,12 @@ def label_agreement(
                 f"(got {dt.simpleString()}); map string ids/labels to "
                 f"integers first"
             )
-    # ONE bounded TopK collect replaces the probe-count + collect pair
-    # (r16): orderBy + LIMIT max_rows+1 is a TakeOrdered, so an
-    # oversized input still fails after a bounded scan (the extra row
-    # proves the overflow), and the in-bound case pays one job, not two.
-    snap = (
+    snap = bounded_collect(
         emb.select(F.col(id_col), F.col(vec_col).cast("array<double>"), F.col(label_col))
-        .orderBy(id_col)
-        .limit(max_rows + 1)
-        .collect()
+        .orderBy(id_col),
+        max_rows,
     )
-    if len(snap) > max_rows:
+    if snap is None:
         raise ValueError(
             f"label_agreement snapshots the labeled set driver-side; "
             f"input exceeds max_rows={max_rows}. Use label_agreement_ivf "
@@ -1034,7 +1030,7 @@ def ivf_search(
         # without materializing, the collect AND the join would each
         # re-run that whole pipeline (block storage is GC-reclaimed, so
         # no unpersist bookkeeping leaks into the caller).
-        q = q.localCheckpoint(eager=True)
+        q = checkpoint_frame(q)
         probed = sorted({r["__list"] for r in q.select("__list").distinct().collect()})
         lists = lists.filter(F.col("__list").isin(probed))
     cand = (
@@ -1152,9 +1148,9 @@ def tune_n_probe(
             c *= 2
     ladder = sorted({min(c, index.n_lists) for c in candidates} | {index.n_lists})
     if exact is None:
-        exact = brute_force_topk(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
+        exact = checkpoint_frame(
+            brute_force_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
+        )
     if search is None:
         def search(np_: int) -> DataFrame:
             return ivf_search(
@@ -1896,12 +1892,11 @@ def retract_from_ann_index(
     # NULL __retracted_id (cast produced nothing) and a round-trip
     # inequality (non-ANSI truncating cast, e.g. double 7.5 -> bigint 7,
     # produces a NON-null wrong key that would tombstone the wrong row).
-    keys = (
+    keys = checkpoint_frame(
         ids.select(F.col(id_col).alias("__raw"))
         .filter(F.col("__raw").isNotNull())
         .distinct()
         .withColumn("__retracted_id", F.col("__raw").cast(id_type))
-        .localCheckpoint(eager=True)
     )
     bad = keys.filter(
         F.col("__retracted_id").isNull()

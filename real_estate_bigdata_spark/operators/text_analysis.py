@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from real_estate_bigdata_spark.util import ensure_min_parallelism
+from real_estate_bigdata_spark.util import checkpoint_frame, ensure_min_parallelism
 from real_estate_bigdata_spark.functions.text import (
     bpe_ish_token_count,
     quality_metrics,
@@ -1056,12 +1056,11 @@ def retract_from_bm25_index(
             f"retraction; rebuild it with build_bm25_index"
         )
     src_type = ids.schema[id_col].dataType.simpleString()
-    keys = (
+    keys = checkpoint_frame(
         ids.select(F.col(id_col).alias("__raw"))
         .filter(F.col("__raw").isNotNull())
         .distinct()
         .withColumn(id_field, F.col("__raw").cast(id_type))
-        .localCheckpoint(eager=True)
     )
     bad = keys.filter(
         F.col(id_field).isNull()
@@ -1096,10 +1095,9 @@ def retract_from_bm25_index(
             id_field,
             "left_anti",
         )
-    derived = (
+    derived = checkpoint_frame(
         posts.join(F.broadcast(keys.select(id_field)), id_field, "left_semi")
         .withColumn("__rseq", F.lit(int(next_seq)))
-        .localCheckpoint(eager=True)
     )
     n = derived.select(id_field).distinct().count()
     if n:

@@ -75,21 +75,26 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # LIMIT-k+1 probe collects (the bounded fast paths in
-        # connected_components / pagerank / dawid_skene / bradley_terry /
-        # train_bpe_batched) execute as incremental take(): the first
+        # LIMIT-k+1 probe collects (util.bounded_collect, behind the
+        # driver fast paths) execute as incremental take(): the first
         # round scans ONE partition, so a probe over a computed pipeline
         # serializes the whole projection on a single core before the
         # 4x scale-up rounds kick in (SPARK-40211's knob; measured the
         # q_domain_authority_cap edge probe at 0.57 s single-task vs
-        # ~0.1 s wide). Start take() at the session's parallelism —
-        # each task still stops after emitting its bounded row share,
-        # so tiny limits on huge tables stay cheap.
+        # ~0.1 s wide). Start take() at the session's parallelism P.
+        # The price is the driver bound: the first round runs P tasks
+        # and each returns up to k+1 rows, so a probe can haul up to
+        # P·(k+1) rows, not k+1 (local[4], 8 partitions, k=20,000:
+        # 1.48 MB from 8 tasks, against 0.19 MB from 1 task at the
+        # default of 1). The setting also reaches every other .limit().
         .config(
             "spark.sql.limit.initialNumPartitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # reliable checkpoints (util.checkpoint_frame) are files in the
+        # checkpoint dir; without this they outlive their frames forever
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # PySpark's daemon minus the per-task zip directory re-read
         # (worker_daemon's docstring); the package must import on executors
         .config(

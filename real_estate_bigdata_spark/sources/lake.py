@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from real_estate_bigdata_spark.schema import RAW_LISTING_SCHEMA
+from real_estate_bigdata_spark.util import checkpoint_frame
 
 __all__ = [
     "read_raw_jsonl",
@@ -209,8 +210,9 @@ def compact_partitions(
       its `_spark_metadata` log pins the exact file set, so rewriting
       in place would corrupt every subsequent root-path read.
     - **in place** (``dest_path=None``, batch tables only): lineage is
-      severed with an eager localCheckpoint before the dynamic partition
-      overwrite, so the rewrite never reads files it is deleting.
+      severed with an eager checkpoint (``util.checkpoint_frame``) before
+      the dynamic partition overwrite, so the rewrite never reads files
+      it is deleting.
       Refused with ValueError on streaming-sink tables.
 
     ``predicate`` (e.g. ``"ingest_date = '2025-04-24'"``) limits work to
@@ -233,7 +235,7 @@ def compact_partitions(
         df = df.filter(predicate)
     if dest_path is None:
         # in-place: materialize before overwriting the files being read
-        df = df.localCheckpoint(eager=True)
+        df = checkpoint_frame(df)
     # Per-PARTITION file sizing. Repartitioning by the partition columns
     # alone would hash every row of one (ingest_date, source) partition
     # to a single task — one giant file per hot partition plus a

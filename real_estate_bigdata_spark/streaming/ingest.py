@@ -56,6 +56,7 @@ _STORE_SCHEMA = "fingerprint bigint, ingest_batch int"
 # operators -> streaming import cycle; re-exported under the old name
 # for this module's many call sites
 from real_estate_bigdata_spark.util import (  # noqa: E402
+    checkpoint_frame,
     is_missing_path_error as _is_missing_path_error,
 )
 
@@ -403,7 +404,7 @@ def run_deduped_doc_ingest(
         novel, _ = dedup_against_store(
             batch_df, store, id_col=id_col, text_col=text_col, keep_fingerprint=True
         )
-        novel = novel.localCheckpoint(eager=True)  # reused by both writes
+        novel = checkpoint_frame(novel)  # reused by both writes
         (
             novel.drop("fingerprint")
             .withColumn("ingest_batch", F.lit(batch_id))
@@ -587,8 +588,8 @@ def _neardup_batch_dedup(
         text_col=text_col,
         return_additions=True,
     )
-    novel = novel.localCheckpoint(eager=True)
-    added_sigs = added_sigs.localCheckpoint(eager=True)
+    novel = checkpoint_frame(novel)
+    added_sigs = checkpoint_frame(added_sigs)
     (
         novel.withColumn("ingest_batch", F.lit(batch_id))
         .write.mode("overwrite")
@@ -679,11 +680,11 @@ def run_guarded_neardup_ingest(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)  # scored + written
+        batch_df = checkpoint_frame(batch_df)  # scored + written
         h_base = sess.read.parquet(baseline_dir)
         h_batch = baseline_histogram(batch_df, metric, lo, hi, n_bins, None)
         report = drift_from_histograms(h_base, h_batch, n_bins, None)
-        report = report.localCheckpoint(eager=True)
+        report = checkpoint_frame(report)
         psi_row = report.agg(F.round(F.sum("psi_contrib"), 6)).first()
         psi = float(psi_row[0]) if psi_row and psi_row[0] is not None else 0.0
         if report_dir is not None:
@@ -782,7 +783,7 @@ def run_embedding_index_ingest(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if append_codes:  # two consumers — don't recompute the batch
-            batch_df = batch_df.localCheckpoint(eager=True)
+            batch_df = checkpoint_frame(batch_df)
         append_ivf_epoch(
             batch_df.sparkSession,
             index_path,
@@ -1071,13 +1072,12 @@ def _retract_keys(
     # caller frame with a narrower/wider type must not dictate the
     # ledger's physical schema. A lossy cast fails loudly instead of
     # writing tombstones the masks can't equi-join.
-    out = (
+    out = checkpoint_frame(  # validate + count + write, one pass
         keys.select(F.col(key_col).alias("__raw"))
         .filter(F.col("__raw").isNotNull())
         .distinct()
         .withColumn(key_col, F.col("__raw").cast(key_type))
         .withColumn("as_of_batch", F.lit(as_of).cast("int"))
-        .localCheckpoint(eager=True)  # validate + count + write, one pass
     )
     src_type = keys.schema[key_col].dataType.simpleString()
     # two lossy-cast guards on the CHECKPOINTED rows: NULL (cast produced
@@ -1315,9 +1315,9 @@ def _compact_epoch_store(
         # still mask unfolded epoch rows. Runs before the epoch deletes
         # (docstring: loud containment failure beats silent
         # resurrection on a double-crash).
-        survivors = tombs.filter(
-            F.col("as_of_batch") >= F.lit(up_to)
-        ).localCheckpoint(eager=True)
+        survivors = checkpoint_frame(
+            tombs.filter(F.col("as_of_batch") >= F.lit(up_to))
+        )
         tdir = jvm.org.apache.hadoop.fs.Path(_tombstones_dir(store_dir))
         if survivors.first() is None:
             tdir.getFileSystem(conf).delete(tdir, True)

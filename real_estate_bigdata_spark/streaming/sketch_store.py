@@ -47,6 +47,7 @@ from real_estate_bigdata_spark.operators.sketches import (
     hll_registers,
 )
 from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest
+from real_estate_bigdata_spark.util import checkpoint_frame
 
 __all__ = [
     "run_hll_distinct_ingest",
@@ -233,7 +234,7 @@ def compact_hll_store(spark: SparkSession, store_dir: str) -> int:
     all previously-folded registers (ADVICE r14). Stale older versions
     are deleted best-effort after the publish. Returns the number of
     register rows in the folded base."""
-    merged = load_streaming_hll(spark, store_dir).localCheckpoint(eager=True)
+    merged = checkpoint_frame(load_streaming_hll(spark, store_dir))
     n = merged.count()
     prior, _ = _newest_committed_base(spark, store_dir)
     new_v = prior + 1

@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 __all__ = [
+    "bounded_collect",
     "checkpoint_frame",
     "concurrently",
     "delete_dir",
@@ -18,33 +19,39 @@ __all__ = [
     "write_fold_marker",
 ]
 
-#: session conf key selecting how operators materialize shared
-#: intermediates when the caller passes materialize=None
+#: session conf key selecting how :func:`checkpoint_frame` materializes
+#: (``"local"`` or ``"reliable"``) — a deployment setting, not a per-call one
 MATERIALIZE_CONF = "spark.real_estate_bigdata.materialize"
 
 
-def checkpoint_frame(df: DataFrame, materialize: str | None = None) -> DataFrame:
-    """Materialize a shared intermediate once for multiple consumers —
-    the knob behind every pair-generator checkpoint (VERDICT r15 task
-    #7: the r15 localCheckpoint fleet is a 100 TB fault-tolerance
-    trade that needed an escape hatch).
+def checkpoint_frame(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage — the one place the
+    engine checkpoints: shared intermediates read by several consumers,
+    per-round state of the iterative loops (connected components,
+    pagerank, Dawid-Skene, Bradley-Terry, BPE), and the streaming
+    ingest micro-batches. ``eager`` mirrors Spark's own argument.
 
-    Modes (``materialize`` argument, falling back to the session conf
-    ``spark.real_estate_bigdata.materialize``, default ``"local"``):
+    The mode comes from the session conf
+    ``spark.real_estate_bigdata.materialize`` (default ``"local"``).
+    Whether a checkpoint must survive executor loss depends on the
+    executors, not on the call, so it is a deployment setting:
 
-    - ``"local"`` — ``localCheckpoint(eager=True)``: blocks live on
-      executor-local storage, reclaimed by the ContextCleaner with the
-      frame. Fastest, but NOT fault-tolerant: losing an executor
-      mid-query fails the job instead of recomputing (lineage is
-      truncated). The right default for on-demand/static executors and
-      for local runs.
-    - ``"reliable"`` — ``checkpoint(eager=True)``: blocks written to
+    - ``"local"`` — ``localCheckpoint``: blocks live on executor-local
+      storage, reclaimed by the ContextCleaner with the frame. Fastest,
+      but NOT fault-tolerant: losing an executor mid-query fails the
+      job instead of recomputing (lineage is truncated). The right
+      default for on-demand/static executors and for local runs.
+    - ``"reliable"`` — ``checkpoint``: blocks written to
       ``spark.sparkContext.setCheckpointDir(...)`` (typically HDFS/
       object storage); executor loss re-reads the checkpoint instead
-      of failing. The 100 TB posture for preemptible/spot executors or
-      aggressive dynamic allocation — pay one durable write per shared
-      intermediate to keep multi-hour jobs restartable. Spark raises
-      its own clear error if no checkpoint dir is set.
+      of failing. The posture for preemptible/spot executors or
+      aggressive dynamic allocation — one durable write per
+      checkpoint keeps multi-hour jobs restartable. Spark raises its
+      own clear error if no checkpoint dir is set. The files of a
+      dropped frame are deleted only because ``session.get_spark``
+      pins ``spark.cleaner.referenceTracking.cleanCheckpoints=true``;
+      without it every per-round and per-micro-batch checkpoint would
+      stay on disk for the life of the checkpoint dir.
 
     ``persist(StorageLevel.DISK_ONLY)`` is deliberately NOT offered:
     a persisted relation sits in the session's cache manager until an
@@ -53,19 +60,32 @@ def checkpoint_frame(df: DataFrame, materialize: str | None = None) -> DataFrame
     accumulate cached relations indefinitely (the image_neardup_pairs
     docstring documents the same rejection).
     """
-    mode = materialize
-    if mode is None:
-        try:
-            mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
-        except Exception:
-            mode = "local"
+    mode = df.sparkSession.conf.get(MATERIALIZE_CONF, "local")
     if mode == "local":
-        return df.localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=eager)
     if mode == "reliable":
-        return df.checkpoint(eager=True)
+        return df.checkpoint(eager=eager)
     raise ValueError(
         f"unknown materialize mode {mode!r} — use 'local' or 'reliable'"
     )
+
+
+def bounded_collect(df: DataFrame, k: int) -> list[Row] | None:
+    """All rows of ``df`` when it has at most ``k`` of them, else None —
+    the probe behind every driver-side fast path (connected components,
+    pagerank, Dawid-Skene, Bradley-Terry, BPE, label_agreement). One
+    ``LIMIT k+1`` collect: when it returns at most ``k`` rows those rows
+    ARE the frame, so no separate count job runs; when it returns
+    ``k+1`` the frame is over the bound and the rows are dropped.
+
+    Driver bound: the session pins ``spark.sql.limit.initialNumPartitions``
+    to its parallelism P (``session.get_spark``), so the first take
+    round runs P tasks and each may return up to ``k+1`` rows — the
+    driver can receive up to P·(k+1) rows before the limit applies,
+    not ``k+1``. At Spark's default of 1 the first round is one task.
+    """
+    rows = df.limit(k + 1).collect()
+    return rows if len(rows) <= k else None
 
 
 def concurrently(*fns):

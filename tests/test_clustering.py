@@ -452,6 +452,44 @@ class TestPagerank:
             for v in fast:
                 assert fast[v] == _pytest.approx(dist[v], abs=1e-7), (kw, v)
 
+    def test_small_edges_threshold_boundary(self, spark, monkeypatch):
+        """At ``small_edges_threshold`` equal to the edge count the
+        ranks come from the numpy path after the raw-edge probe; one
+        below, from the distributed loop. The double probe: one raw
+        edge over the threshold that dedupes to the threshold falls
+        through the raw probe and takes the numpy path on the distinct
+        probe. All three give the same ranks."""
+        edges = [(1, 2), (2, 3), (3, 1), (4, 1), (5, 4), (2, 5)]
+        n = len(edges)
+        probes = []
+        real = cl.bounded_collect
+
+        def spy(df, k):
+            rows = real(df, k)
+            probes.append(None if rows is None else len(rows))
+            return rows
+
+        monkeypatch.setattr(cl, "bounded_collect", spy)
+        got = {}
+        for case, rows, th, want_probes in (
+            ("raw", edges, n, [n]),
+            ("distributed", edges, n - 1, [None, None]),
+            ("distinct", edges + [(1, 2)], n, [None, n]),
+        ):
+            probes.clear()
+            got[case] = {
+                r.node: r.rank
+                for r in cl.pagerank(
+                    self._df(spark, rows), max_iter=5, tol=None,
+                    small_edges_threshold=th,
+                ).collect()
+            }
+            assert probes == want_probes, case
+        for case in ("raw", "distinct"):
+            assert set(got[case]) == set(got["distributed"])
+            for v, rank in got[case].items():
+                assert rank == pytest.approx(got["distributed"][v], abs=1e-7)
+
     def test_validation(self, spark):
         import pytest as _pytest
 

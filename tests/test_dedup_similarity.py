@@ -1828,13 +1828,12 @@ def test_containment_cap_bounds_viral_shingle_blowup(spark):
 
 
 def test_materialize_reliable_matches_local(spark, tmp_path):
-    """r16 (VERDICT r15 task #7): the checkpoint fleet's 100 TB escape
-    hatch. materialize='reliable' routes the shared intermediate
-    through a durable spark checkpoint (executor loss re-reads instead
-    of failing the job) and must be row-identical to the default
-    localCheckpoint path; the session conf
-    spark.real_estate_bigdata.materialize drives the default, and an
-    unknown mode fails loudly."""
+    """The checkpoint fleet's fault-tolerance setting: the session conf
+    spark.real_estate_bigdata.materialize=reliable routes the shared
+    intermediate through a durable spark checkpoint (executor loss
+    re-reads instead of failing the job), writes it to the checkpoint
+    dir, and must be row-identical to the default localCheckpoint
+    path; an unknown mode fails loudly."""
     import pytest
 
     from real_estate_bigdata_spark.util import MATERIALIZE_CONF, checkpoint_frame
@@ -1848,22 +1847,22 @@ def test_materialize_reliable_matches_local(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     local = dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    durable = dd.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.5, materialize="reliable"
-    )
-    assert sorted(map(tuple, local.collect())) == sorted(
-        map(tuple, durable.collect())
-    )
-    # conf-driven default: same rows through the conf route
     spark.conf.set(MATERIALIZE_CONF, "reliable")
     try:
-        via_conf = dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
+        durable = dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
+        # durable still references its checkpoint, so the cleaner keeps it
+        assert [p for p in ckpt.rglob("part-*") if p.is_file()]
         assert sorted(map(tuple, local.collect())) == sorted(
-            map(tuple, via_conf.collect())
+            map(tuple, durable.collect())
         )
     finally:
         spark.conf.unset(MATERIALIZE_CONF)
-    with pytest.raises(ValueError, match="materialize"):
-        checkpoint_frame(docs, "ramdisk")
+    spark.conf.set(MATERIALIZE_CONF, "ramdisk")
+    try:
+        with pytest.raises(ValueError, match="materialize"):
+            checkpoint_frame(docs)
+    finally:
+        spark.conf.unset(MATERIALIZE_CONF)

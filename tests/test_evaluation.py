@@ -1607,6 +1607,50 @@ class TestDawidSkene:
             assert got[i].confidence == pytest.approx(want[i][1], abs=1e-4)
 
 
+    def test_small_votes_threshold_boundary(self, spark, monkeypatch):
+        """At ``small_votes_threshold`` equal to the distinct-vote count
+        the EM runs in numpy on the probed votes; one below, in the
+        distributed loop. Labels and counts agree exactly, confidences
+        to float-reduction tolerance."""
+        from real_estate_bigdata_spark.operators import evaluation as ev
+
+        rng = random.Random(5)
+        rows = [
+            (i, f"r{r}", i % 3 if rng.random() < 0.8 else rng.choice([0, 1, 2]))
+            for i in range(12)
+            for r in range(3)
+        ]
+        df = spark.createDataFrame(rows, "item long, rater string, cat long")
+        calls = []
+        real = ev._dawid_skene_numpy
+
+        def spy(*args, **kw):
+            calls.append(1)
+            return real(*args, **kw)
+
+        monkeypatch.setattr(ev, "_dawid_skene_numpy", spy)
+        got = {}
+        for th, n_numpy in ((len(rows), 1), (len(rows) - 1, 0)):
+            calls.clear()
+            got[th] = {
+                r.item: r
+                for r in dawid_skene(
+                    df, "item", "rater", "cat", max_iter=4, tol=None,
+                    small_votes_threshold=th,
+                ).collect()
+            }
+            assert len(calls) == n_numpy, th
+        fast, dist = got[len(rows)], got[len(rows) - 1]
+        assert set(fast) == set(dist)
+        for i in fast:
+            assert (fast[i].label, fast[i].n_ratings) == (
+                dist[i].label, dist[i].n_ratings
+            )
+            assert fast[i].confidence == pytest.approx(
+                dist[i].confidence, abs=1e-4
+            )
+
+
 class TestPairwisePreference:
     """r11 preference tier: win-rate/Wilson algebra vs hand values,
     validity contract, and Bradley-Terry vs an independent numpy MM
@@ -1728,6 +1772,43 @@ class TestPairwisePreference:
             ).collect()
         }
         assert fast == dist
+
+    def test_bradley_terry_small_pairs_threshold_boundary(
+        self, spark, monkeypatch
+    ):
+        """At ``small_pairs_threshold`` equal to the aggregated pair
+        count the MM iteration runs in numpy; one below, in the
+        distributed loop. Both give the same strengths and games."""
+        from real_estate_bigdata_spark.operators import evaluation as ev
+
+        rows = [
+            ("A", "B", "A"), ("A", "B", "B"), ("A", "C", "A"),
+            ("B", "C", "B"), ("C", "D", "C"), ("D", "E", "E"),
+            ("E", "A", "A"),
+        ]
+        n_pairs = 6  # AB, AC, BC, CD, DE, AE
+        df = spark.createDataFrame(
+            rows, "item_a string, item_b string, winner string"
+        )
+        calls = []
+        real = ev._bt_mm_update
+
+        def spy(*args):
+            calls.append(1)
+            return real(*args)
+
+        monkeypatch.setattr(ev, "_bt_mm_update", spy)
+        got = {}
+        for th, n_numpy in ((n_pairs, 3), (n_pairs - 1, 0)):
+            calls.clear()
+            got[th] = {
+                r.item: (round(r.strength, 4), r.n_games)
+                for r in bradley_terry(
+                    df, max_iter=3, small_pairs_threshold=th
+                ).collect()
+            }
+            assert len(calls) == n_numpy, th
+        assert got[n_pairs] == got[n_pairs - 1]
 
     def test_bradley_terry_validation_and_empty(self, spark):
         df = spark.createDataFrame(

@@ -26,7 +26,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_estate_bigdata_spark.functions.vectors import cosine_from_norms, l2_norm
-from real_estate_bigdata_spark.util import bounded_collect, checkpoint_frame
+from real_estate_bigdata_spark.util import (
+    bounded_collect,
+    checkpoint_frame,
+    write_epoch,
+)
 
 __all__ = [
     "brute_force_topk",
@@ -947,13 +951,8 @@ def append_ivf_epoch(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("c_vec"),
     ).filter(F.col("c_vec").isNotNull() & (F.size("c_vec") == dim))
-    (
-        _assign_lists(new_raw, centroids)
-        .withColumn("ingest_batch", F.lit(int(epoch)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch", "__list")
-        .parquet(_ivf_epochs_dir(path))
+    write_epoch(
+        _assign_lists(new_raw, centroids), _ivf_epochs_dir(path), epoch, "__list"
     )
 
 
@@ -1673,14 +1672,12 @@ def append_pq_epoch(
         for f in spark.read.parquet(f"{path}/codes").schema.fields
         if f.name != "code"
     )
-    (
-        pq_encode(new_corpus, codebook, id_col, vec_col)
-        .select(F.col(id_col).alias(id_field), "code")
-        .withColumn("ingest_batch", F.lit(int(epoch)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(_pq_epochs_dir(path))
+    write_epoch(
+        pq_encode(new_corpus, codebook, id_col, vec_col).select(
+            F.col(id_col).alias(id_field), "code"
+        ),
+        _pq_epochs_dir(path),
+        epoch,
     )
 
 

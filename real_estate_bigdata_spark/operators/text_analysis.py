@@ -11,7 +11,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from real_estate_bigdata_spark.util import checkpoint_frame, ensure_min_parallelism
+from real_estate_bigdata_spark.util import (
+    checkpoint_frame,
+    ensure_min_parallelism,
+    write_epoch,
+)
 from real_estate_bigdata_spark.functions.text import (
     bpe_ish_token_count,
     quality_metrics,
@@ -897,19 +901,14 @@ def append_bm25_epoch(
         .filter(F.col(text_col).isNotNull())
         .select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
     )
-    epoch_lit = F.lit(int(epoch))
-    (
+    write_epoch(
         base.agg(
             F.count("*").cast("double").alias("__n"),
             F.avg(F.size("__toks")).alias("__avgdl"),
             F.sum(F.size("__toks")).cast("double").alias("__sum_dl"),
-        )
-        .withColumn("ingest_batch", epoch_lit)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(_bm25_epochs_dir(path, "stats"))
+        ).coalesce(1),
+        _bm25_epochs_dir(path, "stats"),
+        epoch,
     )
     postings = (
         base.select(
@@ -922,23 +921,16 @@ def append_bm25_epoch(
         .withColumn(
             "__tp", F.pmod(portable_hash64(F.col("term")), F.lit(_BM25_TERM_BUCKETS))
         )
-        .withColumn("ingest_batch", epoch_lit)
     )
-    postings.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("ingest_batch", "__tp").parquet(
-        _bm25_epochs_dir(path, "postings")
-    )
-    (
+    write_epoch(postings, _bm25_epochs_dir(path, "postings"), epoch, "__tp")
+    write_epoch(
         spark.read.parquet(_bm25_epochs_dir(path, "postings"))
-        .filter(F.col("ingest_batch") == epoch_lit)
+        .filter(F.col("ingest_batch") == F.lit(int(epoch)))
         .groupBy("term", "__tp")
-        .agg(F.count("*").cast("double").alias("__df"))
-        .withColumn("ingest_batch", epoch_lit)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch", "__tp")
-        .parquet(_bm25_epochs_dir(path, "term_stats"))
+        .agg(F.count("*").cast("double").alias("__df")),
+        _bm25_epochs_dir(path, "term_stats"),
+        epoch,
+        "__tp",
     )
 
 

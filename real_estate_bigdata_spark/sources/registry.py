@@ -19,7 +19,7 @@ from pyspark.sql.types import StructType
 
 from real_estate_bigdata_spark.functions.normalize import normalize_listings
 from real_estate_bigdata_spark.schema import RAW_LISTING_SCHEMA
-from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest
+from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest, start_sink
 
 __all__ = ["SourceSpec", "SourceRegistry", "kafka_connector_available"]
 
@@ -141,14 +141,9 @@ class SourceRegistry:
             writer = (
                 normalized.writeStream.format("parquet")
                 .option("path", f"{lake_path}/source={spec.name}")
-                .option("checkpointLocation", f"{checkpoint_root}/{spec.name}")
                 .partitionBy("ingest_date")
                 .outputMode("append")
             )
-            writer = (
-                writer.trigger(availableNow=True)
-                if available_now
-                else writer.trigger(processingTime="60 seconds")
-            )
-            queries.append(writer.start())
+            ckpt = f"{checkpoint_root}/{spec.name}"
+            queries.append(start_sink(writer, ckpt, available_now, "60 seconds"))
         return queries

@@ -38,7 +38,8 @@ from real_estate_bigdata_spark.operators.quality import (
     baseline_histogram,
     drift_from_histograms,
 )
-from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest
+from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest, start_sink
+from real_estate_bigdata_spark.util import write_epoch
 
 __all__ = [
     "write_baseline_histogram",
@@ -112,25 +113,13 @@ def run_drift_monitor(
             batch_df, metric, lo, hi, n_bins, group_col
         )
         report = drift_from_histograms(h_base, h_batch, n_bins, group_col)
-        (
-            report.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(report_dir)
-        )
+        write_epoch(report, report_dir, batch_id)
 
     raw = file_stream_ingest(
         spark, src_dir, schema=schema or TESTDATA_SCHEMAS["documents"]
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def read_drift_reports(spark: SparkSession, report_dir: str) -> DataFrame:

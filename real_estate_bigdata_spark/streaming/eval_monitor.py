@@ -44,7 +44,8 @@ from real_estate_bigdata_spark.operators.evaluation import (
     auc_score,
     confusion_at_threshold,
 )
-from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest
+from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest, start_sink
+from real_estate_bigdata_spark.util import write_epoch
 
 __all__ = [
     "batch_eval_report",
@@ -116,26 +117,14 @@ def run_eval_monitor(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         report = batch_eval_report(batch_df, score_col, label_col, threshold)
-        (
-            report.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(report_dir)
-        )
+        write_epoch(report, report_dir, batch_id)
 
     raw = file_stream_ingest(
         spark, src_dir, schema=schema,
         max_files_per_trigger=max_files_per_trigger,
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def read_eval_reports(spark: SparkSession, report_dir: str) -> DataFrame:

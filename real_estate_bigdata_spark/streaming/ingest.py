@@ -21,11 +21,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 from real_estate_bigdata_spark.functions.normalize import normalize_listings
 from real_estate_bigdata_spark.schema import RAW_LISTING_SCHEMA
+from real_estate_bigdata_spark.util import (
+    checkpoint_frame,
+    is_missing_path_error,
+    write_epoch,
+)
 
 __all__ = [
     "compact_fingerprint_store",
@@ -43,22 +48,13 @@ __all__ = [
     "run_embedding_index_ingest",
     "run_bm25_index_ingest",
     "recover_quarantined_epochs",
+    "start_sink",
 ]
 
 #: explicit store schema — epoch reads never infer (an empty but
 #: existing store directory must read as zero rows, not raise
 #: UNABLE_TO_INFER_SCHEMA)
 _STORE_SCHEMA = "fingerprint bigint, ingest_batch int"
-
-
-# moved to util.is_missing_path_error (round 7) so the persisted-ANN
-# artifact readers in operators/similarity.py can share it without an
-# operators -> streaming import cycle; re-exported under the old name
-# for this module's many call sites
-from real_estate_bigdata_spark.util import (  # noqa: E402
-    checkpoint_frame,
-    is_missing_path_error as _is_missing_path_error,
-)
 
 
 def file_stream_ingest(
@@ -76,6 +72,31 @@ def file_stream_ingest(
     return reader.json(src_dir)
 
 
+def start_sink(
+    writer: DataStreamWriter,
+    checkpoint_dir: str,
+    available_now: bool,
+    processing_time: str,
+) -> StreamingQuery:
+    """Start a streaming sink — the one trigger switch of every launcher
+    (file sinks and ``foreachBatch`` epoch stores alike).
+
+    ``available_now=True`` drains everything currently in the source and
+    stops (incremental batch — the modern replacement for the
+    reference's 1-minute polling scheduler ST4); ``False`` runs
+    continuously at ``processing_time`` cadence (ST1's 60-s half). The
+    checkpoint at ``checkpoint_dir`` numbers the epochs: a restart with
+    the same directory re-runs an uncommitted batch under its old id,
+    which is what makes the epoch stores' per-epoch overwrite a replay.
+    """
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 def run_file_ingest(
     spark: SparkSession,
     src_dir: str,
@@ -84,27 +105,16 @@ def run_file_ingest(
     available_now: bool = True,
     processing_time: str = "60 seconds",
 ) -> StreamingQuery:
-    """Launch the ingest query: normalize + partitioned parquet sink.
-
-    ``available_now=True`` drains everything currently in the source and
-    stops (incremental batch — the modern replacement for the
-    reference's 1-minute polling scheduler ST4); ``False`` runs
-    continuously at ``processing_time`` cadence (ST1's 60-s half).
-    """
-    raw = file_stream_ingest(spark, src_dir)
-    normalized = normalize_listings(raw)
+    """Launch the ingest query: normalize + partitioned parquet sink;
+    ``available_now``/``processing_time`` as in :func:`start_sink`."""
+    normalized = normalize_listings(file_stream_ingest(spark, src_dir))
     writer = (
         normalized.writeStream.format("parquet")
         .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .partitionBy("ingest_date", "source")
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def _staged_epoch_dirs(spark: SparkSession, staging_root: str) -> list[str]:
@@ -278,14 +288,8 @@ def run_composite_flush_ingest(
     raw = file_stream_ingest(
         spark, src_dir, max_files_per_trigger=max_files_per_trigger
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def finalize_composite_flush(spark: SparkSession, dest_dir: str) -> int:
@@ -357,86 +361,34 @@ def run_deduped_doc_ingest(
     from real_estate_bigdata_spark.schema import TESTDATA_SCHEMAS
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        sess = batch_df.sparkSession
-        tombs = _read_tombstones(sess, store_dir, "fingerprint", "bigint")
-        try:
-            store = (
-                sess.read.schema(_STORE_SCHEMA).parquet(store_dir)
-                # replay safety: never see this epoch's own (possibly
-                # partial) fingerprints; prunes to prior-epoch partitions
-                .filter(F.col("ingest_batch") < F.lit(batch_id))
-            )
-            # retraction mask: epoch-scoped, so a fingerprint RE-ADDED
-            # after its retraction (the re-ingested document) is live
-            # again and keeps deduplicating its future duplicates
-            store = _mask_retracted(
-                store, tombs, "fingerprint", epoch_col="ingest_batch"
-            ).select("fingerprint")
-        except AnalysisException as exc:
-            # ONLY a missing store path means "first epoch". Any other
-            # read failure (transient storage error, corrupt footer,
-            # permissions) must fail the batch for retry — substituting
-            # an empty store would silently admit every duplicate in
-            # the batch to the lake.
-            if not _is_missing_path_error(exc):
-                raise
-            store = sess.createDataFrame([], "fingerprint bigint")
-        if compacted_table is not None and sess.catalog.tableExists(
-            compacted_table
-        ):
-            # fingerprints folded out of the epoch partitions by
-            # compact_fingerprint_store; never contains any epoch that
-            # could replay (its contract), so no batch-id filter needed.
-            # Live tombstones always postdate every folded row
-            # (compaction consumes the ones it applies), so the
-            # key-only mask is exact here.
-            store = store.unionByName(
-                _mask_retracted(
-                    sess.table(compacted_table).select("fingerprint"),
-                    tombs,
-                    "fingerprint",
-                )
-            )
+        store = _read_prior_store(
+            batch_df.sparkSession,
+            store_dir,
+            batch_id,
+            "fingerprint",
+            "bigint",
+            "fingerprint bigint",
+            compacted_table,
+        )
         # keep_fingerprint: the store write below reuses the fingerprints
         # dedup already computed instead of a second md5 pass per batch
         novel, _ = dedup_against_store(
             batch_df, store, id_col=id_col, text_col=text_col, keep_fingerprint=True
         )
         novel = checkpoint_frame(novel)  # reused by both writes
-        (
-            novel.drop("fingerprint")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(dest_dir)
-        )
+        write_epoch(novel.drop("fingerprint"), dest_dir, batch_id)
         fps = (
             novel.filter(F.col("fingerprint").isNotNull())
             .select("fingerprint")
             .distinct()
         )
-        (
-            fps.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store_dir)
-        )
+        write_epoch(fps, store_dir, batch_id)
 
     raw = file_stream_ingest(
         spark, src_dir, schema=schema or TESTDATA_SCHEMAS["documents"]
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def run_neardup_doc_ingest(
@@ -503,14 +455,8 @@ def run_neardup_doc_ingest(
     raw = file_stream_ingest(
         spark, src_dir, schema=schema or TESTDATA_SCHEMAS["documents"]
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def _neardup_batch_dedup(
@@ -531,53 +477,21 @@ def _neardup_batch_dedup(
     dynamic overwrite. Shared by :func:`run_neardup_doc_ingest` and the
     drift-guarded :func:`run_guarded_neardup_ingest` so the dedup/
     exactly-once mechanics cannot fork between them."""
-    from pyspark.errors import AnalysisException
-
     from real_estate_bigdata_spark.operators.dedup import neardup_against_store
 
-    sess = batch_df.sparkSession
-    # explicit schema, like _STORE_SCHEMA: an empty-but-existing
-    # store dir must read as zero rows, not raise on inference.
-    # The id column's type follows the STREAM schema (a hardcoded
+    # the id column's type follows the STREAM schema (a hardcoded
     # bigint would make every store read fail — and fail again on
-    # every retry — the moment a caller ingests string ids).
+    # every retry — the moment a caller ingests string ids)
     id_type = batch_df.schema[id_col].dataType.simpleString()
-    sig_schema = f"{id_col} {id_type}, sig array<bigint>, ingest_batch int"
-    tombs = _read_tombstones(sess, store_dir, id_col, id_type)
-    try:
-        store = (
-            sess.read.schema(sig_schema).parquet(store_dir)
-            .filter(F.col("ingest_batch") < F.lit(batch_id))
-        )
-        # retraction mask — epoch-scoped; see the exact ingest
-        store = _mask_retracted(
-            store, tombs, id_col, epoch_col="ingest_batch"
-        ).select(id_col, "sig")
-    except AnalysisException as exc:
-        # only a provably-missing path means "first epoch"; any
-        # other failure retries the batch (same contract as the
-        # exact ingest — an empty substitute store would silently
-        # admit every near-duplicate)
-        if not _is_missing_path_error(exc):
-            raise
-        store = sess.createDataFrame(
-            [], f"{id_col} {id_type}, sig array<bigint>"
-        )
-    if compacted_table is not None and sess.catalog.tableExists(
-        compacted_table
-    ):
-        # signatures folded out of the epoch partitions by
-        # compact_signature_store; never contains a replayable
-        # epoch (its contract), so no batch-id filter needed. The
-        # key-only mask is exact for folded rows (compaction
-        # consumes applied tombstones).
-        store = store.unionByName(
-            _mask_retracted(
-                sess.table(compacted_table).select(id_col, "sig"),
-                tombs,
-                id_col,
-            )
-        )
+    store = _read_prior_store(
+        batch_df.sparkSession,
+        store_dir,
+        batch_id,
+        id_col,
+        id_type,
+        f"{id_col} {id_type}, sig array<bigint>",
+        compacted_table,
+    )
     novel, added_sigs = neardup_against_store(
         batch_df,
         store,
@@ -590,20 +504,8 @@ def _neardup_batch_dedup(
     )
     novel = checkpoint_frame(novel)
     added_sigs = checkpoint_frame(added_sigs)
-    (
-        novel.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(dest_dir)
-    )
-    (
-        added_sigs.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
-    )
+    write_epoch(novel, dest_dir, batch_id)
+    write_epoch(added_sigs, store_dir, batch_id)
 
 
 def run_guarded_neardup_ingest(
@@ -688,23 +590,15 @@ def run_guarded_neardup_ingest(
         psi_row = report.agg(F.round(F.sum("psi_contrib"), 6)).first()
         psi = float(psi_row[0]) if psi_row and psi_row[0] is not None else 0.0
         if report_dir is not None:
-            (
-                report.withColumn("psi_total", F.lit(psi))
-                .withColumn("quarantined", F.lit(psi >= psi_threshold))
-                .withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(report_dir)
+            write_epoch(
+                report.withColumn("psi_total", F.lit(psi)).withColumn(
+                    "quarantined", F.lit(psi >= psi_threshold)
+                ),
+                report_dir,
+                batch_id,
             )
         if psi >= psi_threshold:
-            (
-                batch_df.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(quarantine_dir)
-            )
+            write_epoch(batch_df, quarantine_dir, batch_id)
             return
         _neardup_batch_dedup(
             batch_df,
@@ -725,14 +619,8 @@ def run_guarded_neardup_ingest(
         schema=schema or TESTDATA_SCHEMAS["documents"],
         max_files_per_trigger=max_files_per_trigger,
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def run_embedding_index_ingest(
@@ -808,14 +696,8 @@ def run_embedding_index_ingest(
         schema=schema or TESTDATA_SCHEMAS["embeddings"],
         max_files_per_trigger=max_files_per_trigger,
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def run_bm25_index_ingest(
@@ -872,14 +754,8 @@ def run_bm25_index_ingest(
         schema=schema or TESTDATA_SCHEMAS["documents"],
         max_files_per_trigger=max_files_per_trigger,
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def recover_quarantined_epochs(
@@ -996,7 +872,7 @@ def _read_tombstones(
             _tombstones_dir(store_dir)
         )
     except AnalysisException as exc:
-        if not _is_missing_path_error(exc):
+        if not is_missing_path_error(exc):
             raise
         return None
     return t
@@ -1032,6 +908,66 @@ def _mask_retracted(
     return r.join(F.broadcast(tt), cond, "left_anti")
 
 
+def _read_prior_store(
+    sess: SparkSession,
+    store_dir: str,
+    batch_id: int,
+    key_col: str,
+    key_type: str,
+    value_schema: str,
+    compacted_table: str | None,
+) -> DataFrame:
+    """The dedup store as batch ``batch_id`` must see it: every epoch
+    BEFORE this one, minus retracted rows, plus the compacted tier —
+    the ``value_schema`` columns only. Shared by the exact and near-dup
+    ingests so their exactly-once reads cannot fork.
+
+    The read schema is explicit (``value_schema`` + ``ingest_batch``):
+    an empty but existing store directory must read as zero rows, not
+    raise on inference."""
+    from pyspark.errors import AnalysisException
+
+    tombs = _read_tombstones(sess, store_dir, key_col, key_type)
+    try:
+        store = (
+            sess.read.schema(f"{value_schema}, ingest_batch int")
+            .parquet(store_dir)
+            # replay safety: never see this epoch's own (possibly
+            # partial) rows; prunes to prior-epoch partitions
+            .filter(F.col("ingest_batch") < F.lit(batch_id))
+        )
+        # retraction mask: epoch-scoped, so a key RE-ADDED after its
+        # retraction (the re-ingested document) is live again and keeps
+        # deduplicating its future duplicates
+        store = _mask_retracted(
+            store, tombs, key_col, epoch_col="ingest_batch"
+        ).drop("ingest_batch")
+    except AnalysisException as exc:
+        # ONLY a missing store path means "first epoch". Any other read
+        # failure (transient storage error, corrupt footer, permissions)
+        # must fail the batch for retry — substituting an empty store
+        # would silently admit every duplicate in the batch to the lake.
+        if not is_missing_path_error(exc):
+            raise
+        store = sess.createDataFrame([], value_schema)
+    if compacted_table is not None and sess.catalog.tableExists(
+        compacted_table
+    ):
+        # rows folded out of the epoch partitions by the store's
+        # compaction; never contains an epoch that could replay (its
+        # contract), so no batch-id filter. Live tombstones always
+        # postdate every folded row (compaction consumes the ones it
+        # applies), so the key-only mask is exact here.
+        store = store.unionByName(
+            _mask_retracted(
+                sess.table(compacted_table).select(*store.columns),
+                tombs,
+                key_col,
+            )
+        )
+    return store
+
+
 def _retract_keys(
     spark: SparkSession,
     store_dir: str,
@@ -1063,7 +999,7 @@ def _retract_keys(
             .first()[0]
         )
     except AnalysisException as exc:
-        if not _is_missing_path_error(exc):
+        if not is_missing_path_error(exc):
             raise
         epochs = None
     as_of = -1 if epochs is None else int(epochs)
@@ -1228,7 +1164,9 @@ def _compact_epoch_store(
         epoch_ids = sorted(
             r[0] for r in epochs_df.select("ingest_batch").distinct().collect()
         )  # bounded: one id per micro-batch since the last compaction
-    except AnalysisException:
+    except AnalysisException as exc:
+        if not is_missing_path_error(exc):
+            raise
         epoch_ids = []
     if not epoch_ids:
         return 0

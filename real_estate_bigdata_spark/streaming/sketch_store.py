@@ -46,8 +46,8 @@ from real_estate_bigdata_spark.operators.sketches import (
     hll_merge,
     hll_registers,
 )
-from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest
-from real_estate_bigdata_spark.util import checkpoint_frame
+from real_estate_bigdata_spark.streaming.ingest import file_stream_ingest, start_sink
+from real_estate_bigdata_spark.util import checkpoint_frame, write_epoch
 
 __all__ = [
     "run_hll_distinct_ingest",
@@ -68,7 +68,7 @@ def _meta_committed(spark: SparkSession, store_dir: str) -> bool:
     return ok.getFileSystem(hconf).exists(ok)
 
 
-def _write_meta(spark: SparkSession, store_dir: str, p: int, group_cols):
+def _write_meta(spark: SparkSession, store_dir: str, row: tuple, schema: str):
     # Geometry is immutable for a store's lifetime, so write meta only
     # when absent (ADVICE r14): the per-batch overwrite bought nothing
     # and its delete/rewrite window could transiently fail a concurrent
@@ -76,9 +76,9 @@ def _write_meta(spark: SparkSession, store_dir: str, p: int, group_cols):
     # geometry-less until the next batch).
     if _meta_committed(spark, store_dir):
         return
-    spark.createDataFrame(
-        [(int(p), ",".join(group_cols or []))], "p int, group_cols string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{store_dir}/meta")
+    spark.createDataFrame([row], schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{store_dir}/meta")
 
 
 def _read_meta(spark: SparkSession, store_dir: str) -> tuple[int, list[str]]:
@@ -107,28 +107,20 @@ def run_hll_distinct_ingest(
     keys = list(group_cols or [])
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        _write_meta(sess, store_dir, p, keys)
-        regs = hll_registers(batch_df, col, p=p, group_cols=keys)
-        (
-            regs.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(f"{store_dir}/epochs")
+        _write_meta(
+            batch_df.sparkSession,
+            store_dir,
+            (int(p), ",".join(keys)),
+            "p int, group_cols string",
         )
+        regs = hll_registers(batch_df, col, p=p, group_cols=keys)
+        write_epoch(regs, f"{store_dir}/epochs", batch_id)
 
     raw = file_stream_ingest(
         spark, src_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def _newest_committed_base(
@@ -300,35 +292,22 @@ def run_cms_ingest(
     from real_estate_bigdata_spark.operators.sketches import count_min_sketch
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        # write-once: geometry is immutable for the store's lifetime
-        # (same ADVICE-r14 rationale as the HLL meta tier)
-        if not _meta_committed(sess, store_dir):
-            sess.createDataFrame(
-                [(int(width), int(depth))], "width int, depth int"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{store_dir}/meta")
+        _write_meta(
+            batch_df.sparkSession,
+            store_dir,
+            (int(width), int(depth)),
+            "width int, depth int",
+        )
         cells = count_min_sketch(
             batch_df, col, width=width, depth=depth, weight_col=weight_col
         )
-        (
-            cells.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(f"{store_dir}/epochs")
-        )
+        write_epoch(cells, f"{store_dir}/epochs", batch_id)
 
     raw = file_stream_ingest(
         spark, src_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    writer = raw.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = raw.writeStream.foreachBatch(_process)
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)
 
 
 def _newest_cms_base(

@@ -25,6 +25,7 @@ from real_estate_bigdata_spark.sources.kafka import (
     decode_kafka_records,
     encode_kafka_records,
 )
+from real_estate_bigdata_spark.streaming.ingest import start_sink
 
 __all__ = [
     "write_kafka_envelopes",
@@ -84,12 +85,7 @@ def run_speed_layer(
     writer = (
         normalized.writeStream.format("parquet")
         .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
         .partitionBy("ingest_date", "source")
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_sink(writer, checkpoint_dir, available_now, processing_time)

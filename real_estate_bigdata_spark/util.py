@@ -16,6 +16,7 @@ __all__ = [
     "read_fold_marker",
     "swap_in_rewrite",
     "with_run_metrics",
+    "write_epoch",
     "write_fold_marker",
 ]
 
@@ -168,6 +169,29 @@ def is_missing_path_error(exc) -> bool:
         if cls is not None:
             return cls == "PATH_NOT_FOUND"
     return "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
+
+
+def write_epoch(df: DataFrame, path: str, batch_id: int, *sub_partitions: str) -> None:
+    """Write ``df`` as epoch ``batch_id`` of the store at ``path`` — the
+    one write of every crash-safe epoch store (streaming dedup lakes and
+    stores, drift/eval reports, sketch stores, ANN and BM25 epoch tiers).
+
+    Rows are tagged ``ingest_batch = batch_id`` and written with DYNAMIC
+    partition overwrite under ``partitionBy("ingest_batch",
+    *sub_partitions)``: only this epoch's partitions are replaced, so a
+    replayed micro-batch (same epoch id after a crash) overwrites exactly
+    its own half-written output and every other epoch stays untouched.
+    Readers make the replay safe by reading only ``ingest_batch <
+    batch_id`` (see ``streaming.ingest._read_prior_store``)."""
+    from pyspark.sql import functions as F
+
+    (
+        df.withColumn("ingest_batch", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch", *sub_partitions)
+        .parquet(path)
+    )
 
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:

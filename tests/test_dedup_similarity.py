@@ -542,6 +542,18 @@ def test_label_agreement_flags_planted_mislabel(spark):
     }
 
 
+def test_label_agreement_max_rows_boundary(spark):
+    """The driver snapshot takes exactly ``max_rows`` rows and refuses
+    one more."""
+    import pytest
+
+    rows = [(i, [1.0, float(i)], i % 2) for i in range(6)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+    assert sim.label_agreement(emb, max_rows=6).count() == 6
+    with pytest.raises(ValueError, match="exceeds max_rows=5"):
+        sim.label_agreement(emb, max_rows=5)
+
+
 def test_portable_hash64_matches_duckdb_on_adversarial_strings(spark):
     """portable_hash64 is the cross-engine contract every portable-mode
     oracle rests on (SimHash, fingerprints, hash_split); pin Spark ==

@@ -7,6 +7,7 @@ across restarts; NULL-text docs always pass and never poison the store.
 from __future__ import annotations
 
 import json
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -35,6 +36,22 @@ def _run(spark, src, dest, store, ckpt):
         spark, str(src), str(dest), str(store), str(ckpt)
     )
     q.awaitTermination(120)
+
+
+def _lose_commit_and_lake_epoch(ckpt, dest, epoch=0):
+    """Double crash after epoch ``epoch`` wrote its store partition: its
+    lake partition is gone and its checkpoint commit never landed, so a
+    restart on the same checkpoint re-runs the batch under the SAME id."""
+    (ckpt / "commits" / str(epoch)).unlink()
+    (ckpt / "commits" / f".{epoch}.crc").unlink()
+    shutil.rmtree(dest / f"ingest_batch={epoch}")
+
+
+def _lake_rows(spark, dest):
+    """(doc_id, ingest_batch) of the lake, sorted; an empty lake reads as
+    no rows instead of failing schema inference."""
+    lake = spark.read.schema("doc_id bigint, ingest_batch int").parquet(str(dest))
+    return sorted((r.doc_id, r.ingest_batch) for r in lake.collect())
 
 
 class TestDedupedDocIngest:
@@ -99,6 +116,49 @@ class TestDedupedDocIngest:
         assert out.select("doc_id").distinct().count() == 2
         assert out.count() == 2
         assert spark.read.parquet(str(store)).count() == 2
+
+
+    def test_same_epoch_replay_ignores_its_own_store_rows(self, spark, tmp_path):
+        """The replayed batch keeps its id, and the store already holds
+        that epoch's fingerprints from the first attempt. Only the
+        prior-epoch read (``ingest_batch < batch_id``) keeps the batch
+        from deduplicating against itself and losing every row."""
+        src = tmp_path / "drop"
+        src.mkdir()
+        dest, store, ckpt = tmp_path / "lake", tmp_path / "store", tmp_path / "ckpt"
+        _write_jsonl(src / "b1.jsonl", [(1, "aaa bbb"), (2, "ccc ddd")])
+        _run(spark, src, dest, store, ckpt)
+        assert _lake_rows(spark, dest) == [(1, 0), (2, 0)]
+
+        _lose_commit_and_lake_epoch(ckpt, dest)
+        _run(spark, src, dest, store, ckpt)
+        assert _lake_rows(spark, dest) == [(1, 0), (2, 0)]
+        assert spark.read.parquet(str(store)).count() == 2
+
+    def test_continuous_trigger(self, spark, tmp_path):
+        """``available_now=False`` starts the query on a processing-time
+        trigger; it keeps running until stopped."""
+        src = tmp_path / "drop"
+        src.mkdir()
+        dest, store, ckpt = tmp_path / "lake", tmp_path / "store", tmp_path / "ckpt"
+        _write_jsonl(
+            src / "b1.jsonl", [(1, "aaa bbb"), (2, "ccc ddd"), (3, "aaa   bbb")]
+        )
+        q = ingest.run_deduped_doc_ingest(
+            spark,
+            str(src),
+            str(dest),
+            str(store),
+            str(ckpt),
+            available_now=False,
+            processing_time="0 seconds",
+        )
+        try:
+            q.processAllAvailable()
+            assert q.isActive
+        finally:
+            q.stop()
+        assert [r[0] for r in _lake_rows(spark, dest)] == [1, 2]
 
 
 class TestFingerprintStoreCompaction:
@@ -329,6 +389,25 @@ class TestNeardupDocIngest:
         assert out.select("doc_id").distinct().count() == 2
         assert out.count() == 2
         assert spark.read.parquet(str(store)).count() == 2
+
+
+    def test_same_epoch_replay_ignores_its_own_store_rows(self, spark, tmp_path):
+        """Near-dup twin of the exact ingest's same-epoch replay: the
+        replayed batch must not near-dup-match its own signatures."""
+        src = tmp_path / "drop"
+        src.mkdir()
+        dest, store, ckpt = tmp_path / "lake", tmp_path / "store", tmp_path / "ckpt"
+        _write_jsonl(src / "b1.jsonl", [(1, BASE_TEXT), (2, OTHER_TEXT)])
+        _run_near(spark, src, dest, store, ckpt)
+        assert _lake_rows(spark, dest) == [(1, 0), (2, 0)]
+
+        _lose_commit_and_lake_epoch(ckpt, dest)
+        _run_near(spark, src, dest, store, ckpt)
+        assert _lake_rows(spark, dest) == [(1, 0), (2, 0)]
+        assert sorted(r.doc_id for r in spark.read.parquet(str(store)).collect()) == [
+            1,
+            2,
+        ]
 
 
 def test_neardup_ingest_string_ids(spark, tmp_path):
